@@ -8,6 +8,7 @@ Scala compiler that ships in Spark's jar directory, into
 import glob
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -15,7 +16,18 @@ import sys
 BENCH = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH)
 OUT = os.path.join(BENCH, ".build")
-SPARK_JARS = os.path.join(os.environ.get("SPARK_HOME", "/opt/spark"), "jars")
+
+
+def spark_jars_dir():
+    """`$SPARK_HOME/jars`, else the jar directory the repository's own
+    build.sbt compiles against (its `unmanagedBase`)."""
+    if os.environ.get("SPARK_HOME"):
+        return os.path.join(os.environ["SPARK_HOME"], "jars")
+    with open(os.path.join(ROOT, "build.sbt")) as f:
+        m = re.search(r'unmanagedBase\s*:=\s*file\("([^"]+)"\)', f.read())
+    if not m:
+        raise SystemExit("Spark jars not found: set SPARK_HOME")
+    return m.group(1)
 
 
 def engine_sources():
@@ -28,9 +40,10 @@ def bench_sources():
 
 
 def spark_classpath():
-    jars = sorted(glob.glob(os.path.join(SPARK_JARS, "*.jar")))
+    jars_dir = spark_jars_dir()
+    jars = sorted(glob.glob(os.path.join(jars_dir, "*.jar")))
     if not jars:
-        raise SystemExit(f"no Spark jars under {SPARK_JARS}")
+        raise SystemExit(f"no Spark jars under {jars_dir}")
     return jars
 
 
