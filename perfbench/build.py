@@ -1,9 +1,10 @@
 """Build file of the benchmark: compiles the engine (``src/main/scala`` of
 the checkout) together with the harness (``perfbench/scala``) with the
 Scala compiler that ships in Spark's jar directory, into
-``perfbench/.build``. A content hash of every source skips rebuilds.
+``perfbench/.build/perfbench.jar``. A content hash of every source skips
+rebuilds.
 
-    python3 perfbench/build.py      # prints the classes directory
+    python3 perfbench/build.py      # prints the jar
 """
 import glob
 import hashlib
@@ -12,6 +13,7 @@ import re
 import shutil
 import subprocess
 import sys
+import zipfile
 
 BENCH = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH)
@@ -48,7 +50,8 @@ def spark_classpath():
 
 
 def build():
-    """Compile if any source changed; return the classes directory."""
+    """Compile if any source changed; return the jar. A rebuild also drops
+    the class-data-sharing archives of the previous build."""
     engine = engine_sources()
     if not any(p.endswith(os.path.join("graft", "SparkEntry.scala")) for p in engine):
         raise SystemExit("engine sources (src/main/scala/graft) not found next to perfbench/")
@@ -60,8 +63,9 @@ def build():
             h.update(hashlib.sha256(f.read()).digest())
     stamp = os.path.join(OUT, "stamp")
     classes = os.path.join(OUT, "classes")
-    if os.path.exists(stamp) and open(stamp).read() == h.hexdigest():
-        return classes
+    jar = os.path.join(OUT, "perfbench.jar")
+    if os.path.exists(jar) and os.path.exists(stamp) and open(stamp).read() == h.hexdigest():
+        return jar
     shutil.rmtree(OUT, ignore_errors=True)
     os.makedirs(classes)
     jars = spark_classpath()
@@ -77,9 +81,14 @@ def build():
     if r.returncode != 0:
         sys.stderr.write(r.stdout[-4000:])
         raise SystemExit("compile failed")
+    # a jar, not a directory, so the JVM's class-data sharing covers it
+    with zipfile.ZipFile(jar, "w") as z:
+        for d, _, files in os.walk(classes):
+            for f in files:
+                z.write(os.path.join(d, f), os.path.relpath(os.path.join(d, f), classes))
     with open(stamp, "w") as f:
         f.write(h.hexdigest())
-    return classes
+    return jar
 
 
 if __name__ == "__main__":

@@ -11,12 +11,14 @@ Two kinds of input:
 * ``clickstream`` builds a RetailRocket-shaped raw archive from the run
   seed: view / addtocart / transaction events (transactions near 0.8 %),
   Zipf-skewed visitor and item keys, a few bot-grade hot visitors, and
-  bounded event-time disorder. Events are grouped into release slots; the
-  harness turns each slot into one Kafka-envelope file.
+  bounded event-time disorder. Events are grouped into files (release
+  slots, or the files of a drain backlog); the harness turns each file
+  into one Kafka-envelope file.
 """
 import csv
 import datetime as dt
 import os
+import zlib
 
 import numpy as np
 import pyarrow as pa
@@ -146,38 +148,57 @@ def _zipf_keys(rng, n, domain, s):
     return rng.permutation(domain)[rng.choice(domain, n, p=p)]
 
 
-def clickstream(out_dir, seed, slots, events_per_slot, slot_event_s=180,
-                max_disorder_s=1200, visitors=4000, items=3000, bots=3):
-    """Write a raw clickstream archive as one CSV per release slot
-    (``slot-00000.csv`` ...; the reference's 5-string raw shape) and return
-    the number of events.
+def clickstream(out_dir, seed, prefix, sizes, event_gap_s=30, max_disorder_s=1200,
+                visitors=4000, items=3000, bots=3, bot_share=0.06):
+    """Write a raw clickstream archive as CSV files ``<prefix>-00000.csv``
+    ... (the reference's 5-string raw shape), file ``i`` holding
+    ``sizes[i]`` events, and return the number of events.
 
-    Slot ``i`` covers event time ``[i, i+1) * slot_event_s`` seconds after
-    the archive start; each event may land up to ``max_disorder_s`` early,
-    so it arrives after younger events but never later than the streaming
-    watermark (one hour) allows.
+    Event ``k`` of the archive falls in ``[k, k+1) * event_gap_s`` seconds
+    after the archive start, less up to ``max_disorder_s``: it arrives
+    after younger events but never later than the streaming watermark (one
+    hour) allows. Archives with another ``prefix`` draw other events from
+    the same seed.
+
+    The mix of view / addtocart / transaction (96.7 / 2.5 / 0.8 %) follows
+    RetailRocket, whose 2,756,101 events carry 22,457 transactions
+    (BASELINE.md). Key skew is chosen, not measured: Zipf(1.05) over
+    ``visitors`` visitors, Zipf(1.1) over ``items`` items, and ``bots``
+    hot visitors sharing ``bot_share`` of the events.
     """
     os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng(seed)
-    n = slots * events_per_slot
-    slot = np.repeat(np.arange(slots), events_per_slot)
-    t_s = (slot + rng.uniform(0, 1, n)) * slot_event_s - rng.uniform(0, max_disorder_s, n)
+    rng = np.random.default_rng([seed, zlib.crc32(prefix.encode())])
+    n = int(sum(sizes))
+    t_s = (np.arange(n) + rng.uniform(0, 1, n)) * event_gap_s - rng.uniform(0, max_disorder_s, n)
     t_s = np.maximum(t_s, 0.0)
     base_ms = 1433116800000  # 2015-06-01T00:00:00Z, inside the RetailRocket span
     ts_ms = base_ms + (t_s * 1000).astype("int64")
     vis = _zipf_keys(rng, n, visitors, 1.05)
-    hot = rng.random(n) < 0.06
+    hot = rng.random(n) < bot_share
     vis[hot] = visitors + rng.integers(0, bots, hot.sum())
     item = _zipf_keys(rng, n, items, 1.1)
     u = rng.random(n)
     event = np.where(u < 0.008, 2, np.where(u < 0.033, 1, 0))
     names = ("view", "addtocart", "transaction")
     txn = np.cumsum(event == 2)
-    for s in range(slots):
-        with open(os.path.join(out_dir, f"slot-{s:05d}.csv"), "w", newline="") as f:
-            w = csv.writer(f)
+    k = 0
+    for f, size in enumerate(sizes):
+        with open(os.path.join(out_dir, f"{prefix}-{f:05d}.csv"), "w", newline="") as fh:
+            w = csv.writer(fh)
             w.writerow(["timestamp", "visitorid", "event", "itemid", "transactionid"])
-            for i in range(s * events_per_slot, (s + 1) * events_per_slot):
+            for i in range(k, k + size):
                 w.writerow([ts_ms[i], vis[i], names[event[i]], item[i],
                             txn[i] if event[i] == 2 else ""])
+        k += size
     return n
+
+
+def release_sizes(slots, interval_ms, offered_eps):
+    """Events per release slot at a steady ``offered_eps``: slot ``i`` holds
+    the events due in ``[i, i+1) * interval_ms``. Every slot holds at least
+    one event."""
+    due = [offered_eps * interval_ms * i // 1000 for i in range(slots + 1)]
+    sizes = [b - a for a, b in zip(due, due[1:])]
+    if min(sizes) < 1:
+        raise ValueError("offered rate below one event per release slot")
+    return sizes

@@ -15,6 +15,7 @@ A run writes only under ``perfbench/.work`` (removed at exit) and
 failed output check exits with code 1. See ``README.md``.
 """
 import argparse
+import datetime
 import json
 import os
 import random
@@ -50,8 +51,17 @@ SENTINEL = "~wm~|"
 SETUPS = 3  # set-ups per run; setup_s is their median
 BATCH_PASSES = 3  # timed passes at least, so p75 has ten samples beyond it
 REGISTRY_SCALE = 0.3  # registry tables at 0.3x the shape of the sf0.01 testdata
-# open loop: 6 events every 50 ms (120 events/s); the drains take 60 files a trigger
-STREAM = dict(events_per_slot=6, interval_ms=50, files_per_trigger=60)
+# Drain backlog, the same size whatever --seconds is: 40 files of 36 events.
+# The reference DAG (its closed-loop capacity, capacity_eps) and the
+# sessions query each drain it in 10 triggers of 4 files.
+DRAIN = dict(files=40, events_per_file=36, files_per_trigger=4)
+# Open loop: one release slot every 100 ms at a fixed offered rate, about
+# half the capacity_eps the drain measures on a 4-core host (see README.md),
+# so the open-loop engine keeps up and latency does not grow with the run.
+# Slots of 3 events, not 1 or 2 every 50 ms: the file source's cost per file
+# would otherwise make a slow trigger collect more files and slow down more.
+OFFERED_EPS = 30
+INTERVAL_MS = 100
 HEAP = "2g"
 KILL_AFTER_S = 170
 
@@ -61,7 +71,20 @@ def cores():
     return max(1, min(4, os.cpu_count() or 1))
 
 
-def java_cmd(classes, work, args):
+def cds_archive(jar, workload):
+    """JVM options for class-data sharing. A workload's first run in a
+    checkout dumps the classes it loaded into an archive next to the jar
+    (``run_harness`` keeps it once the run succeeds); later runs map it,
+    which halves the JVM's cold start. Every timing is taken after the
+    first, untimed set-up, so the archive shortens runs without moving
+    their numbers."""
+    path = os.path.join(os.path.dirname(jar), f"{workload}.jsa")
+    if os.path.exists(path):
+        return path, [f"-XX:SharedArchiveFile={path}"]
+    return path, [f"-XX:ArchiveClassesAtExit={path}.tmp"]
+
+
+def java_cmd(jar, work, args, cds):
     opens = []
     for p in ("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net", "java.nio",
               "java.util", "java.util.concurrent", "java.util.concurrent.atomic", "sun.nio.ch",
@@ -69,10 +92,10 @@ def java_cmd(classes, work, args):
         opens += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    return (["java"] + opens + [
+    return (["java"] + opens + cds + [
         f"-Xmx{HEAP}", f"-Djava.io.tmpdir={tmp}", "-Duser.timezone=UTC",
         f"-Dderby.system.home={work}", f"-Dderby.stream.error.file={os.path.join(work, 'derby.log')}",
-        "-cp", os.pathsep.join([classes] + build.spark_classpath()), "perfbench.Harness"]
+        "-cp", os.pathsep.join([jar] + build.spark_classpath()), "perfbench.Harness"]
         + [f"{k}={v}" for k, v in args.items()])
 
 
@@ -99,14 +122,15 @@ class Releaser:
             self.log.append((f, due, time.time() * 1000))
 
 
-def run_harness(classes, work, args, stream_files=None):
+def run_harness(jar, work, args, stream_files=None):
     """Run the JVM. For the stream workload, act as the releaser once it
     prints READY. Returns (result dict, releaser log)."""
     out = os.path.join(work, "result.json")
     log_path = os.path.join(work, "harness.log")
     releaser = None
+    archive, cds = cds_archive(jar, args["workload"])
     with open(log_path, "w") as log:
-        p = subprocess.Popen(java_cmd(classes, work, dict(args, work=work, out=out)),
+        p = subprocess.Popen(java_cmd(jar, work, dict(args, work=work, out=out), cds),
                              stdout=subprocess.PIPE, stderr=log, text=True, cwd=work)
         killer = threading.Timer(KILL_AFTER_S, p.kill)
         killer.start()
@@ -114,7 +138,7 @@ def run_harness(classes, work, args, stream_files=None):
             for line in p.stdout:
                 if line.strip() == "READY" and stream_files:
                     releaser = Releaser(os.path.join(work, "outbox"), os.path.join(work, "watch"),
-                                        stream_files, STREAM["interval_ms"])
+                                        stream_files, INTERVAL_MS)
                     releaser.run()
                     open(os.path.join(work, "released.done"), "w").close()
             rc = p.wait()
@@ -126,6 +150,8 @@ def run_harness(classes, work, args, stream_files=None):
     if rc != 0 or not os.path.exists(out):
         sys.stderr.write(open(log_path).read()[-6000:])
         raise SystemExit(f"harness failed with exit code {rc}")
+    if os.path.exists(archive + ".tmp"):
+        os.replace(archive + ".tmp", archive)
     with open(out) as f:
         return json.load(f), (releaser.log if releaser else [])
 
@@ -158,14 +184,14 @@ def add_job_layers(layer, rec):
 # ---------------------------------------------------------------- batch
 
 
-def batch(classes, work, seed, seconds, trace, pins, pin):
+def batch(jar, work, seed, seconds, trace, pins):
     names = sorted(pins)
     gen.registry_tables(os.path.join(work, "registry"), REGISTRY_SCALE)
     rng = random.Random(seed)
     orders = [rng.sample(names, len(names)) for _ in range(64)]
     with open(os.path.join(work, "orders.txt"), "w") as f:
         f.write("\n".join(",".join(o) for o in orders))
-    res, _ = run_harness(classes, work, dict(
+    res, _ = run_harness(jar, work, dict(
         workload="batch_registry", cores=cores(), seconds=seconds, trace=trace, setups=SETUPS,
         orders=os.path.join(work, "orders.txt"), min_passes=BATCH_PASSES))
     qs = res["queries"]
@@ -175,9 +201,7 @@ def batch(classes, work, seed, seconds, trace, pins, pin):
         if name in res["output_errors"]:
             continue
         d = stats.digest(read_rows(work, name))
-        if pin:
-            pins[name]["digest"] = d
-        elif d != pins[name]["digest"]:
+        if d != pins[name]["digest"]:
             failures[f"{name} digest"] = f"{d} != pinned {pins[name]['digest']}"
     passes = sorted({q["pass"] for q in qs})
     pass_s = [(max(q["end"] for q in qs if q["pass"] == p)
@@ -235,21 +259,24 @@ def batch_layers(res, qs, pins, passes):
                          end=max(q["end"] for q in qs)))
     # a pass runs every query once from empty memos: report the median pass
     layer = {k: stats.median([per_pass[p][k] for p in passes]) for k in PER_LAYER}
-    return layer, records, spans
+    return layer, records, spans, dict.fromkeys(PER_LAYER, len(passes))
 
 
 # ---------------------------------------------------------------- stream
 
 
-def stream(classes, work, seed, seconds, trace):
-    slots = seconds * 1000 // STREAM["interval_ms"]
-    events = gen.clickstream(os.path.join(work, "raw"), seed, slots, STREAM["events_per_slot"])
+def stream(jar, work, seed, seconds, trace):
+    slots = seconds * 1000 // INTERVAL_MS
+    raw = os.path.join(work, "raw")
+    open_events = gen.clickstream(raw, seed, "slot", gen.release_sizes(slots, INTERVAL_MS, OFFERED_EPS))
+    drain_events = gen.clickstream(raw, seed, "drain", [DRAIN["events_per_file"]] * DRAIN["files"])
     files = [f"slot-{i:05d}.json" for i in range(slots)]
-    res, rel = run_harness(classes, work, dict(
+    res, rel = run_harness(jar, work, dict(
         workload="stream_reference", cores=cores(), seconds=seconds, trace=trace, setups=SETUPS,
-        slots=slots, interval_ms=STREAM["interval_ms"],
-        files_per_trigger=STREAM["files_per_trigger"]), stream_files=files)
-    phase = {ph: [p for p in res["progress"] if p["phase"] == ph] for ph in ("open", "cap", "sessions")}
+        slots=slots, interval_ms=INTERVAL_MS, drain_files=DRAIN["files"],
+        files_per_trigger=DRAIN["files_per_trigger"]), stream_files=files)
+    progress = progress_rows(res)
+    phase = {ph: [p for p in progress if p["phase"] == ph] for ph in ("open", "cap", "sessions")}
     file_batch = {f: int(b) for f, b in res["open_files"]}
     failures = {f"sink {c['phase']} batch {c['batch']} {c['table']}": "write failed"
                 for c in res["sink_calls"] if not c["ok"]}
@@ -269,52 +296,81 @@ def stream(classes, work, seed, seconds, trace):
     late_max, late_p50 = stats.release_lateness([(s, a) for _, s, a in rel])
     tail_q = stats.tail_quantile(slots)
     # output checks
-    late_rows = sum(p["late_rows"] for p in res["progress"])
+    late_rows = sum(p["late_rows"] for p in progress)
     if late_rows:
         failures["late rows"] = f"{late_rows} rows dropped behind the watermark"
-    if res["events"] != events:
-        failures["archive"] = f"archive holds {res['events']} events, generated {events}"
-    for table in ADDITIVE:
-        want = read_rows(work, f"expected.{table}")
-        for ph in ("open", "cap"):
-            bad = stats.additive_mismatches(read_rows(work, f"{ph}.{table}"), want)
+    primer = DRAIN["files_per_trigger"] * DRAIN["events_per_file"]
+    for name, got, want in (("open archive", res["events_open"], open_events + primer),
+                            ("drain archive", res["events_drain"], drain_events)):
+        if got != want:
+            failures[name] = f"holds {got} events, generated {want}"
+    for ph, archive in (("open", "open"), ("cap", "drain")):
+        for table in ADDITIVE:
+            bad = stats.additive_mismatches(read_rows(work, f"{ph}.{table}"),
+                                            read_rows(work, f"expected.{archive}.{table}"))
             if bad:
                 failures[f"{ph} {table}"] = f"{len(bad)} keys differ from the batch result, e.g. {bad[:3]}"
     got = [r for r in read_rows(work, "sessions.global_sessions") if not r.startswith(SENTINEL)]
     missing, extra = stats.multiset_diff(got, read_rows(work, "expected.global_sessions"))
     if missing or extra:
         failures["sessions"] = f"{len(missing)} missing, {len(extra)} unexpected vs the batch twin"
+    # the drain time is its trigger count at the median trigger time: the
+    # median passes over the query's first trigger, which also starts the
+    # query, and over a trigger a stall of the host stretches
+    cap_ms = [p["duration_ms"]["triggerExecution"] for p in phase["cap"] if p["rows"] > 0]
+    drain_s = len(cap_ms) * stats.median(cap_ms) / 1000
+    capacity = drain_events / drain_s
+    offered = open_events * 1000 / (slots * INTERVAL_MS)
     e2e = {"setup_s": (stats.median(res["setup_s"]), len(res["setup_s"])),
-           "total_s": (res["cap_s"], 1),
+           "total_s": (drain_s, len(cap_ms)),
            "latency_p50_ms": (stats.percentile(lat, 0.5), len(lat)),
            "latency_tail_ms": (stats.percentile(lat, tail_q), len(lat))}
     human = [("setup_s", *e2e["setup_s"], "s"), ("total_s", *e2e["total_s"], "s"),
              ("latency_p50_ms", *e2e["latency_p50_ms"], "ms"),
              (f"latency_{stats.quantile_name(tail_q)}_ms", *e2e["latency_tail_ms"], "ms"),
-             ("capacity_eps", events / res["cap_s"], 1, "1/s"),
-             ("sessions_capacity_eps", events / res["sessions_s"], 1, "1/s"),
-             ("offered_eps", STREAM["events_per_slot"] * 1000 / STREAM["interval_ms"], 1, "1/s"),
+             ("drain_wall_s", res["cap_s"], 1, "s"),
+             ("capacity_eps", capacity, len(cap_ms), "1/s"),
+             ("sessions_capacity_eps", drain_events / res["sessions_s"], len(phase["sessions"]), "1/s"),
+             ("offered_eps", offered, slots, "1/s"),
+             ("offered_share", offered / capacity, 1, "ratio"),
              ("release_late_ms_p50", late_p50, len(rel), "ms"),
              ("release_late_ms_max", late_max, len(rel), "ms")]
-    attempted = sum(len(v) for v in phase.values()) + 2 * len(ADDITIVE) + 2
-    layer = stream_layers(res, phase, file_batch, rel, late_max, events) if trace else None
+    attempted = sum(len(v) for v in phase.values()) + 2 * len(ADDITIVE) + 4
+    layer = stream_layers(res, phase, file_batch, rel, late_max, drain_events) if trace else None
     res["unchecked_tables"] = UNCHECKED
     return res, e2e, human, attempted, failures, layer, tail_q
 
 
-def trigger_records(res, ph):
-    """Per-trigger job numbers of one drain phase. Spark stamps each job of
-    a micro-batch with its batch id; phases number their batches
-    independently, so a trigger's jobs are those inside its interval."""
+def progress_rows(res):
+    """The fields the benchmark reads from each StreamingQueryProgress."""
+    rows = []
+    for r in res["progress"]:
+        p = r["progress"]
+        ops = p.get("stateOperators", [])
+        rows.append(dict(
+            phase=r["phase"], batch=p["batchId"], rows=p["numInputRows"], duration_ms=p["durationMs"],
+            start=round(datetime.datetime.fromisoformat(p["timestamp"]).timestamp() * 1000),
+            state_rows=sum(o["numRowsTotal"] for o in ops),
+            state_memory=sum(o["memoryUsedBytes"] for o in ops),
+            state_commit_ms=sum(o["commitTimeMs"] for o in ops),
+            state_update_ms=sum(o["allUpdatesTimeMs"] for o in ops),
+            late_rows=sum(o["numRowsDroppedByWatermark"] for o in ops)))
+    return rows
+
+
+def trigger_records(res, phase_progress):
+    """Per-trigger job and planning numbers of one drain phase. Spark stamps
+    each job of a micro-batch with its batch id; phases number their
+    batches independently, so a trigger's jobs and query plans are those
+    that start inside its interval."""
     records, spans = [], []
-    for p in res["progress"]:
-        if p["phase"] != ph:
-            continue
-        start, dur = p["start"], p["duration_ms"].get("triggerExecution", 0)
+    for p in phase_progress:
+        ph, start, dur = p["phase"], p["start"], p["duration_ms"].get("triggerExecution", 0)
         js = [j for j in res["jobs"] if j["batch"] == str(p["batch"]) and start <= j["start"] <= start + dur]
         gap = dur - stats.union_length([(j["start"], j["end"]) for j in js], start, start + dur)
+        plan_ms = sum(q["ms"] for q in res["plans"] if start <= q["start"] <= start + dur)
         records.append(dict(phase=ph, batch=p["batch"], rows=p["rows"], trigger_ms=dur, **job_totals(js),
-                            gap_ms=gap, state_commit_ms=p["state_commit_ms"],
+                            gap_ms=gap, plan_ms=plan_ms, state_commit_ms=p["state_commit_ms"],
                             state_update_ms=p["state_update_ms"], state_rows=p["state_rows"]))
         sid = f"trigger:{ph}:{p['batch']}"
         spans.append(dict(id=sid, parent="run", name=f"trigger {ph}", start=start, end=start + dur))
@@ -323,56 +379,64 @@ def trigger_records(res, ph):
     return records, spans
 
 
-def stream_layers(res, phase, file_batch, rel, late_max, events):
+def stream_layers(res, phase, file_batch, rel, late_max, drain_events):
+    """Per-layer numbers. Driver and exchange numbers come from the
+    closed-loop drains, whose triggers are the same on every run of a seed;
+    per-trigger figures are medians (or maxima) over the drain's triggers,
+    whose count the record keeps under ``samples``."""
     layer = dict.fromkeys(PER_LAYER, 0.0)
-    cap, spans = trigger_records(res, "cap")
-    sess, sess_spans = trigger_records(res, "sessions")
+    cap, spans = trigger_records(res, phase["cap"])
+    sess, sess_spans = trigger_records(res, phase["sessions"])
     spans += sess_spans
     spans += [dict(id=f"sink:cap:{c['batch']}:{c['table']}", parent=f"trigger:cap:{c['batch']}",
                    name=c["table"], start=c["start"], end=c["end"])
               for c in res["sink_calls"] if c["phase"] == "cap"]
     spans.insert(0, dict(id="run", parent=None, name="run", start=min(s["start"] for s in spans),
                          end=max(s["end"] for s in spans)))
-    # driver and exchange numbers come from the closed-loop phases, whose
-    # triggers are the same on every run of a seed
     for r in cap:
         add_job_layers(layer, r)
+        layer["driver.plan_ms"] += r["plan_ms"]
         layer["clean.scan_parse_task_ms"] += r["scan_ms"]
     for r in sess:
         layer["exchanges.shuffle_write_bytes"] += r["shuffle_write"]
         layer["exchanges.shuffle_read_bytes"] += r["shuffle_read"]
         layer["exchanges.spill_bytes"] += r["spill"]
         layer["exchanges.skew_max_over_median"] = max(layer["exchanges.skew_max_over_median"], r["skew"])
-    cap_start = min(p["start"] for p in phase["cap"])
-    sess_start = min(p["start"] for p in phase["sessions"])
-    layer["driver.plan_ms"] = sum(p["ms"] for p in res["plans"] if cap_start <= p["start"] < sess_start)
-    layer["driver.jobs_per_trigger"] = stats.median([r["jobs"] for r in cap])
+    cap_data = [r for r in cap if r["rows"] > 0]
+    sess_data = [r for r in sess if r["rows"] > 0]
+    layer["driver.jobs_per_trigger"] = stats.median([r["jobs"] for r in cap_data])
     layer["caching.persist_bytes_peak"] = res["persist_peak_bytes"]
-    data = {p["batch"]: p["start"] for p in phase["open"] if p["rows"] > 0}
+    # open-phase triggers that ingested released files (not the primer)
+    released = {file_batch[f] for f, _, _ in rel if f in file_batch}
+    data = {p["batch"]: p["start"] for p in phase["open"] if p["batch"] in released}
     backlog = stats.backlog_at_triggers({f: a for f, _, a in rel}, file_batch, data)
     layer["sources.backlog_files_max"] = max(backlog.values(), default=0)
-    layer["sources.rows_per_trigger_p50"] = stats.median([p["rows"] for p in phase["open"] if p["rows"] > 0])
+    layer["sources.rows_per_trigger_p50"] = stats.median([p["rows"] for p in phase["open"] if p["batch"] in released])
     layer["sources.triggers"] = len(data)
     layer["sources.release_late_ms_max"] = late_max
-    layer["clean.rows_parsed"] = sum(p["rows"] for p in phase["cap"])
+    layer["clean.rows_parsed"] = sum(r["rows"] for r in cap)
     for t in TABLES:
         layer[f"analytics.{t}.ms"] = stats.median(
             [c["end"] - c["start"] for c in res["sink_calls"] if c["phase"] == "cap" and c["table"] == t])
     layer["sink.write_calls"] = len(res["sink_calls"])
     layer["sink.failed_writes"] = sum(1 for c in res["sink_calls"] if not c["ok"])
     layer["sink.rows_written"] = sum(sum(res[f"sink_rows_{ph}"].values()) for ph in ("open", "cap"))
-    trig = [r["trigger_ms"] for r in sess if r["rows"] > 0]
-    layer["stream.commit_ms_p50"] = stats.median([r["state_commit_ms"] for r in sess if r["rows"] > 0])
-    layer["stream.update_ms_p50"] = stats.median([r["state_update_ms"] for r in sess if r["rows"] > 0])
+    trig = [r["trigger_ms"] for r in sess_data]
+    layer["stream.commit_ms_p50"] = stats.median([r["state_commit_ms"] for r in sess_data])
+    layer["stream.update_ms_p50"] = stats.median([r["state_update_ms"] for r in sess_data])
     layer["stream.trigger_ms_p50"] = stats.median(trig)
-    layer["stream.trigger_ms_p99"] = stats.percentile(trig, 0.99)
+    layer["stream.trigger_ms_max"] = max(trig, default=0)
     layer["stream.state_rows_max"] = max(p["state_rows"] for p in phase["sessions"])
     layer["stream.state_memory_bytes_max"] = max(p["state_memory"] for p in phase["sessions"])
     layer["stream.checkpoint_bytes"] = res["checkpoint_bytes"]
     layer["stream.late_rows_dropped"] = sum(p["late_rows"] for p in phase["sessions"])
     if "local1_cap_s" in res:
-        layer["stream.capacity_eps_local1"] = events / res["local1_cap_s"]
-    return layer, cap + sess, spans
+        layer["stream.capacity_eps_local1"] = drain_events / res["local1_cap_s"]
+    samples = {"driver.jobs_per_trigger": len(cap_data), "sources.rows_per_trigger_p50": len(data),
+               **{f"analytics.{t}.ms": len(cap_data) for t in TABLES},
+               **{k: len(sess_data) for k in ("stream.commit_ms_p50", "stream.update_ms_p50",
+                                              "stream.trigger_ms_p50", "stream.trigger_ms_max")}}
+    return layer, cap + sess, spans, samples
 
 
 # ---------------------------------------------------------------- main
@@ -384,13 +448,10 @@ def main(argv=None):
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--pin", action="store_true",
-                    help="batch_registry: record the output digests in pins/registry.json")
     a = ap.parse_args(argv)
 
-    classes = build.build()
-    pins_path = os.path.join(BENCH, "pins", "registry.json")
-    with open(pins_path) as f:
+    jar = build.build()
+    with open(os.path.join(BENCH, "pins", "registry.json")) as f:
         pins = json.load(f)
     work = os.path.join(BENCH, ".work", f"{a.workload}-{a.seed}-{a.trace}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
@@ -398,16 +459,12 @@ def main(argv=None):
     try:
         if a.workload == "batch_registry":
             res, e2e, human, attempted, failures, layer, tail_q = batch(
-                classes, work, a.seed, a.seconds, a.trace, pins, a.pin)
+                jar, work, a.seed, a.seconds, a.trace, pins)
         else:
             res, e2e, human, attempted, failures, layer, tail_q = stream(
-                classes, work, a.seed, a.seconds, a.trace)
+                jar, work, a.seed, a.seconds, a.trace)
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    if a.pin:
-        with open(pins_path, "w") as f:
-            json.dump(pins, f, indent=1)
-            f.write("\n")
 
     failed = len(failures)
     human.append(("failed_share", failed / attempted, attempted, "ratio"))
@@ -427,7 +484,7 @@ def main(argv=None):
                   samples={k: v[1] for k, v in e2e.items()}, failures=failures,
                   setup_runs_s=res["setup_s"], env=res["env"])
     if a.trace:
-        values, records, spans = layer
+        values, records, spans, samples = layer
         # tracing overhead: this traced run against the untraced run of the
         # same workload and seed, when one was made in this checkout
         base_path = os.path.join(out_dir, f"{tag}-trace0.json")
@@ -438,11 +495,13 @@ def main(argv=None):
             overhead = {k: e2e[k][0] / base[k] - 1 for k in e2e if base.get(k)}
             for k, v in overhead.items():
                 print(f"tracing overhead {k} = {100 * v:+.1f} %")
-        record.update(per_layer=values, tracing_overhead=overhead, records=records, spans=spans,
+        record.update(per_layer=values, per_layer_samples=samples, tracing_overhead=overhead,
+                      records=records, spans=spans,
                       self_time_ms={k: v for k, v in stats.self_times(spans).items()
                                     if not k.startswith("job:")})
         for k, unit in PER_LAYER.items():
-            print(f"{k} = {values[k]:.6g} {unit}")
+            n = f" (n={samples[k]})" if k in samples else ""
+            print(f"{k} = {values[k]:.6g} {unit}{n}")
         metrics = {k: {"value": float(values[k]), "unit": unit} for k, unit in PER_LAYER.items()}
     else:
         metrics = {k: {"value": float(e2e[k][0]), "unit": unit} for k, unit in END_TO_END.items()}

@@ -3,6 +3,7 @@ package perfbench
 import java.io.File
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
@@ -34,7 +35,7 @@ object Batch {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
 
-  def run(o: Opts, work: File, out: Json): Unit = {
+  def run(o: Opts, work: File, out: Out): Unit = {
     val data = new File(work, "registry").getPath
     val orders = Files.readAllLines(Paths.get(o("orders"))).asScala.map(_.split(",").toSeq).toSeq
     val cores = o.int("cores")
@@ -46,7 +47,7 @@ object Batch {
       (s, ())
     }
     env(spark, out)
-    out.field("setup_end", now())
+    out("setup_end") = now()
     // untimed first pass, three queries at a time: collects every output
     // for the digest check and leaves the JVM warm for the timed passes
     val outDir = new File(work, "outputs"); outDir.mkdirs()
@@ -63,37 +64,33 @@ object Batch {
         })
       }.flatMap(_.get())
     } finally pool.shutdown()
-    out.objField("output_errors") { errors.foreach { case (n, e) => out.field(n, e) } }
-    out.field("outputs_end", now())
+    out("output_errors") = errors.toMap
+    out("outputs_end") = now()
     val tracer = if (o("trace") == "1") { val t = new Tracer(spark); t.install(); Some(t) } else None
     val sc = spark.sparkContext
     val budgetMs = o.int("seconds") * 1000L
     val t0 = now()
     var pass = 0
-    out.arrField("queries") {
-      while (pass < o.int("min_passes") || now() - t0 < budgetMs) {
-        val memo = new File(work, s"memo/pass-$pass")
-        freshMemo(spark, memo)
-        orders(pass % orders.size).foreach { name =>
-          val before = memoEntries(memo).toSet
-          sc.setLocalProperty(SpanKey, s"q:$pass:$name")
-          val start = now()
-          val err = try {
-            SparkEntry.queries(name)(spark, data).write.format("noop").mode("overwrite").save(); ""
-          } catch { case e: Throwable => s"${e.getClass.getName}: ${e.getMessage}".take(500) }
-          val end = now()
-          sc.setLocalProperty(SpanKey, null)
-          out.item {
-            out.field("name", name); out.field("pass", pass)
-            out.field("start", start); out.field("end", end); out.field("error", err)
-            out.field("memo_new", memoEntries(memo).filterNot(before))
-            out.field("memo_bytes", dirBytes(memo))
-          }
-        }
-        pass += 1
+    val queries = mutable.ArrayBuffer.empty[Map[String, Any]]
+    while (pass < o.int("min_passes") || now() - t0 < budgetMs) {
+      val memo = new File(work, s"memo/pass-$pass")
+      freshMemo(spark, memo)
+      orders(pass % orders.size).foreach { name =>
+        val before = memoEntries(memo).toSet
+        sc.setLocalProperty(SpanKey, s"q:$pass:$name")
+        val start = now()
+        val err = try {
+          SparkEntry.queries(name)(spark, data).write.format("noop").mode("overwrite").save(); ""
+        } catch { case e: Throwable => s"${e.getClass.getName}: ${e.getMessage}".take(500) }
+        val end = now()
+        sc.setLocalProperty(SpanKey, null)
+        queries += Map("name" -> name, "pass" -> pass, "start" -> start, "end" -> end, "error" -> err,
+          "memo_new" -> memoEntries(memo).filterNot(before), "memo_bytes" -> dirBytes(memo))
       }
+      pass += 1
     }
-    out.field("passes", pass)
+    out("queries") = queries.toSeq
+    out("passes") = pass
     tracer.foreach { t => t.drain(); t.writeJobs(out) }
     spark.stop()
   }

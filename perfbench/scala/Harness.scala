@@ -6,16 +6,19 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
 /** The system-under-test side of the benchmark. It drives the engine only
   * through its public functions and writes raw records (timings, spans,
-  * Spark job/stage/task counts, stream progress, canonicalized outputs) as
-  * one JSON file; `run.py` turns them into metrics and checks them.
+  * Spark job/stage/task counts, stream progress, canonicalized outputs) into
+  * one map written as a JSON file; `run.py` turns them into metrics and
+  * checks them.
   *
   * Arguments are `key=value`: workload, work (directory for every file the
   * run makes), out (the result file), cores, seconds, trace (0|1) and
   * setups; `batch_registry` adds orders and min_passes, `stream_reference`
-  * adds slots, interval_ms and files_per_trigger. The stream workload
+  * adds slots, interval_ms, drain_files and files_per_trigger. The stream workload
   * prints `READY` once warm and waits for the releaser's `released.done`.
   */
 object Harness {
@@ -25,6 +28,14 @@ object Harness {
     def int(k: String): Int = apply(k).toInt
   }
 
+  /** The raw result of a run: plain Scala maps, sequences, strings and
+    * numbers, serialized with json4s at exit. */
+  type Out = mutable.LinkedHashMap[String, Any]
+
+  implicit val formats: Formats = DefaultFormats
+
+  def toJson(v: AnyRef): String = Serialization.write(v)
+
   val SpanKey = "perfbench.span"
   val BatchIdKey = "streaming.sql.batchId"
 
@@ -33,16 +44,13 @@ object Harness {
   def main(args: Array[String]): Unit = {
     val o = Opts(args.map { a => val i = a.indexOf('='); a.take(i) -> a.drop(i + 1) }.toMap)
     val work = new File(o("work")).getAbsoluteFile
-    val out = new Json
-    out.obj {
-      out.field("workload", o("workload"))
-      o("workload") match {
-        case "batch_registry" => Batch.run(o, work, out)
-        case "stream_reference" => Streams.run(o, work, out)
-        case w => sys.error(s"unknown workload $w")
-      }
+    val out: Out = mutable.LinkedHashMap("workload" -> o("workload"))
+    o("workload") match {
+      case "batch_registry" => Batch.run(o, work, out)
+      case "stream_reference" => Streams.run(o, work, out)
+      case w => sys.error(s"unknown workload $w")
     }
-    Files.writeString(Paths.get(o("out")), out.result)
+    Files.writeString(Paths.get(o("out")), toJson(out))
   }
 
   /** A fresh local session on `cores` threads; shuffle partitions (and so
@@ -66,7 +74,7 @@ object Harness {
 
   /** Run `setup` `times` times, stopping the previous session in between,
     * and record every duration; the last session is kept. */
-  def repeatedSetup[T](times: Int, out: Json)(setup: () => (SparkSession, T)): (SparkSession, T) = {
+  def repeatedSetup[T](times: Int, out: Out)(setup: () => (SparkSession, T)): (SparkSession, T) = {
     var last: (SparkSession, T) = null
     val secs = (1 to times).map { i =>
       if (last != null) { last._1.stop(); SparkSession.clearActiveSession(); SparkSession.clearDefaultSession() }
@@ -74,20 +82,17 @@ object Harness {
       last = setup()
       (System.nanoTime() - t0) / 1e9
     }
-    out.field("setup_s", secs)
+    out("setup_s") = secs
     last
   }
 
-  def env(spark: SparkSession, out: Json): Unit = out.objField("env") {
-    out.field("nproc", Runtime.getRuntime.availableProcessors())
-    out.field("max_heap_bytes", Runtime.getRuntime.maxMemory())
-    out.field("loadavg", Files.readString(Paths.get("/proc/loadavg")).trim)
-    out.field("java", System.getProperty("java.version"))
-    out.field("spark", spark.version)
-    out.objField("spark_conf") {
-      spark.conf.getAll.toSeq.sortBy(_._1).foreach { case (k, v) => out.field(k, v) }
-    }
-  }
+  def env(spark: SparkSession, out: Out): Unit = out("env") = Map(
+    "nproc" -> Runtime.getRuntime.availableProcessors(),
+    "max_heap_bytes" -> Runtime.getRuntime.maxMemory(),
+    "loadavg" -> Files.readString(Paths.get("/proc/loadavg")).trim,
+    "java" -> System.getProperty("java.version"),
+    "spark" -> spark.version,
+    "spark_conf" -> spark.conf.getAll)
 
   /** Canonical text form of one output row: doubles to 9 significant
     * digits, timestamps as epoch micros, nested values recursively. */
@@ -128,6 +133,7 @@ object Tracer {
 
 final class Tracer(spark: SparkSession) {
   import org.apache.spark.scheduler._
+  import Harness.Out
   import Tracer._
 
   final class StageRec {
@@ -198,80 +204,22 @@ final class Tracer(spark: SparkSession) {
   /** Wait until every posted listener event has been delivered. */
   def drain(): Unit = org.apache.spark.perfbenchshim.Bus.drain(spark)
 
-  def writeJobs(out: Json): Unit = synchronized {
-    out.arrField("jobs") {
-      jobs.values.foreach { j =>
-        out.item {
-          out.field("id", j.id); out.field("span", j.span); out.field("batch", j.batch)
-          out.field("start", j.start); out.field("end", j.end)
-          val ss = j.stages.flatMap(stages.get)
-          out.field("stages", ss.size)
-          out.field("tasks", ss.map(_.tasks).sum)
-          out.field("run_ms", ss.map(_.runMs).sum)
-          out.field("gc_ms", ss.map(_.gcMs).sum)
-          out.field("shuffle_write", ss.map(_.shWrite).sum)
-          out.field("shuffle_read", ss.map(_.shRead).sum)
-          out.field("spill", ss.map(_.spill).sum)
-          out.field("scan_run_ms", ss.filter(_.scan).map(_.runMs).sum)
-          // skew of the job's most unbalanced shuffle-reading stage
-          val skews = ss.filter(_.readPerTask.size >= 2).map { s =>
-            val v = s.readPerTask.sorted
-            v.last.toDouble / math.max(1L, v(v.size / 2))
-          }
-          out.field("skew", if (skews.isEmpty) 1.0 else skews.max)
-        }
+  def writeJobs(out: Out): Unit = synchronized {
+    out("jobs") = jobs.values.toSeq.map { j =>
+      val ss = j.stages.flatMap(stages.get)
+      // skew of the job's most unbalanced shuffle-reading stage
+      val skews = ss.filter(_.readPerTask.size >= 2).map { s =>
+        val v = s.readPerTask.sorted
+        v.last.toDouble / math.max(1L, v(v.size / 2))
       }
+      Map("id" -> j.id, "span" -> j.span, "batch" -> j.batch, "start" -> j.start, "end" -> j.end,
+        "stages" -> ss.size, "tasks" -> ss.map(_.tasks).sum, "run_ms" -> ss.map(_.runMs).sum,
+        "gc_ms" -> ss.map(_.gcMs).sum, "shuffle_write" -> ss.map(_.shWrite).sum,
+        "shuffle_read" -> ss.map(_.shRead).sum, "spill" -> ss.map(_.spill).sum,
+        "scan_run_ms" -> ss.filter(_.scan).map(_.runMs).sum,
+        "skew" -> (if (skews.isEmpty) 1.0 else skews.max))
     }
-    out.arrField("plans") {
-      plans.foreach { p =>
-        out.item {
-          out.field("start", p.start); out.field("end", p.end); out.field("ms", p.ms)
-          out.field("memo_reads", p.memoReads)
-        }
-      }
-    }
+    out("plans") = plans.toSeq.map(p =>
+      Map("start" -> p.start, "end" -> p.end, "ms" -> p.ms, "memo_reads" -> p.memoReads))
   }
-}
-
-object Json {
-  /** `s` as a JSON string literal. */
-  def quote(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case c if c < ' ' => b.append("\\u%04x".format(c.toInt))
-      case c => b.append(c)
-    }
-    b.append('"').toString
-  }
-}
-
-/** Minimal streaming JSON writer. */
-final class Json {
-  private val sb = new StringBuilder
-  private val first = mutable.Stack[Boolean]()
-  private def sep(): Unit = if (first.nonEmpty) { if (!first.top) sb.append(','); first.pop(); first.push(false) }
-  private def key(k: String): Unit = { sep(); str(k); sb.append(':') }
-  private def str(s: String): Unit = sb.append(Json.quote(s))
-  private def value(v: Any): Unit = v match {
-    case null => sb.append("null")
-    case s: String => str(s)
-    case b: Boolean => sb.append(b)
-    case d: Double => sb.append(if (d.isNaN || d.isInfinite) "null" else d.toString)
-    case n: Int => sb.append(n)
-    case n: Long => sb.append(n)
-    case xs: Iterable[_] => sb.append('['); var f = true
-      xs.foreach { x => if (!f) sb.append(','); f = false; value(x) }; sb.append(']')
-    case x => str(x.toString)
-  }
-  private def block(open: Char, close: Char)(body: => Unit): Unit = {
-    sb.append(open); first.push(true); body; first.pop(); sb.append(close)
-  }
-  def obj(body: => Unit): Unit = block('{', '}')(body)
-  def field(k: String, v: Any): Unit = { key(k); value(v) }
-  def objField(k: String)(body: => Unit): Unit = { key(k); obj(body) }
-  def arrField(k: String)(body: => Unit): Unit = { key(k); block('[', ']')(body) }
-  def item(body: => Unit): Unit = { sep(); obj(body) }
-  def result: String = sb.toString
 }

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.json4s.jackson.JsonMethods.parse
 
 import graft.analytics.{Items, MinuteStats}
 import graft.clean.CleanStage
@@ -18,22 +19,27 @@ import graft.sources.Replay
 import graft.stream.{GlobalSessions, StreamJob}
 import org.apache.spark.perfbenchshim.Bus
 
-/** The `stream_reference` workload, three phases over one archive.
+/** The `stream_reference` workload, three phases over two archives made
+  * from the same generator: the open archive (one small file per release
+  * slot) and the drain archive (a fixed number of larger files).
   *
   *  - `open`: the reference DAG through `StreamJob.start` (envelope parse →
   *    the ten analyses per micro-batch → JDBC append into embedded Derby)
-  *    watches an empty directory; an outside releaser moves one envelope
-  *    file into it per release slot, on a fixed schedule.
-  *  - `cap`: the same DAG drains the archive pre-staged as a backlog,
+  *    watches a directory; after a first trigger over a few drain files,
+  *    an outside releaser moves one open-archive file into it per release
+  *    slot, on a fixed schedule.
+  *  - `cap`: the same DAG drains the drain archive pre-staged as a backlog,
   *    closed loop, at a fixed number of files per trigger.
   *  - `sessions`: correct-mode `GlobalSessions.sessionWindow` in streaming
   *    mode drains the same backlog (whose events arrive out of order, within
   *    the watermark) followed by two watermark-flush sentinels, so every
-  *    session closes and the result can equal the batch twin.
+  *    session closes and the result can equal the batch twin. Its first
+  *    trigger is also the query's first in the JVM.
   *
   * All reference phases append into one Derby database whose ten tables
-  * the warm-up creates; each phase's rows are read back for the checks and
-  * deleted before the next phase starts.
+  * the open phase's first trigger (over a few drain files, before the
+  * release starts) creates; each phase's rows are read back for the checks
+  * and deleted before the next phase starts.
   */
 object Streams {
   import Harness._
@@ -45,33 +51,36 @@ object Streams {
   /** Progress and sink-call records of one stream query, labelled with
     * the phase running when they happened. */
   final class Recorder(@volatile var phase: String) extends StreamingQueryListener {
-    val progress = mutable.ArrayBuffer.empty[(String, StreamingQueryProgress)]
-    // (phase, batch, table, start, end, ok)
-    val sinkCalls = mutable.ArrayBuffer.empty[(String, Long, String, Long, Long, Boolean)]
+    // (phase, StreamingQueryProgress.json)
+    val progress = mutable.ArrayBuffer.empty[(String, String)]
+    val sinkCalls = mutable.ArrayBuffer.empty[Map[String, Any]]
     val sessionRows = mutable.HashMap.empty[Long, Seq[String]]
     var persistPeak = 0L
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-      synchronized { progress += ((phase, e.progress)) }
+      synchronized { progress += ((phase, e.progress.json)) }
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
 
-  /** Clean the raw archive (`CleanStage`), stamp each event with its
-    * release offset, wrap it as a Kafka envelope (`Replay.kafkaEnvelope`)
-    * and write one JSON-lines file per release slot into `staging`. */
+  /** Clean the raw archives (`CleanStage`), stamp each open-archive event
+    * with its release offset, wrap every event as a Kafka envelope
+    * (`Replay.kafkaEnvelope`) and write one JSON-lines file per raw file
+    * into `staging`. Returns the clean events with their `archive_file`. */
   def buildArchive(spark: SparkSession, rawDir: String, staging: File, intervalMs: Long): DataFrame = {
-    val raw = Replay.readRawCsv(spark, s"$rawDir/slot-*.csv")
-      .withColumn("slot", regexp_extract(input_file_name(), "slot-(\\d+)\\.csv", 1).cast("int"))
+    val raw = Replay.readRawCsv(spark, s"$rawDir/*.csv")
+      .withColumn("archive_file", regexp_extract(input_file_name(), "((slot|drain)-\\d+)\\.csv", 1))
     val clean = CleanStage(raw)
+    val release = when(col("archive_file").startsWith("slot-"),
+      substring(col("archive_file"), 6, 5).cast("long") * intervalMs)
     val stamped = clean.select(
-      (Schemas.clean.fieldNames.toSeq.map(col) :+ (col("slot") * intervalMs).as("release_offset_ms")): _*)
+      (Schemas.clean.fieldNames.toSeq.map(col) :+ release.as("release_offset_ms") :+ col("archive_file")): _*)
     val rows = Replay.kafkaEnvelope(stamped)
-      .withColumn("slot", (get_json_object(col("value"), "$.release_offset_ms").cast("long") / intervalMs).cast("int"))
+      .withColumn("archive_file", get_json_object(col("value"), "$.archive_file"))
       .collect()
     staging.mkdirs()
-    rows.groupBy(_.getInt(2)).foreach { case (slot, rs) =>
-      val lines = rs.map(r => s"""{"key":${Json.quote(r.getString(0))},"value":${Json.quote(r.getString(1))}}""")
-      Files.write(new File(staging, f"slot-$slot%05d.json").toPath, lines.toSeq.asJava)
+    rows.groupBy(_.getString(2)).foreach { case (file, rs) =>
+      val lines = rs.map(r => toJson(Map("key" -> r.getString(0), "value" -> r.getString(1))))
+      Files.write(new File(staging, s"$file.json").toPath, lines.toSeq.asJava)
     }
     clean
   }
@@ -80,10 +89,10 @@ object Streams {
     * the watermark beyond every session, so all of them close. */
   def writeSentinels(staging: File, maxMs: Long, n: Int): Seq[String] = (0 until n).map { i =>
     val ms = maxMs + (1800L + 3600L + 60L + i) * 1000L
-    val v = s"""{"timestamp":"t","visitorid":"$Sentinel","event":"view","itemid":"i","transactionid":null,""" +
-      s""""event_category":"Low Value","unix_timestamp":"$ms"}"""
+    val v = toJson(Map("timestamp" -> "t", "visitorid" -> Sentinel, "event" -> "view", "itemid" -> "i",
+      "event_category" -> "Low Value", "unix_timestamp" -> ms.toString))
     val name = f"sentinel-$i%02d.json"
-    Files.writeString(new File(staging, name).toPath, s"""{"key":"$Sentinel","value":${Json.quote(v)}}""" + "\n")
+    Files.writeString(new File(staging, name).toPath, toJson(Map("key" -> Sentinel, "value" -> v)) + "\n")
     name
   }
 
@@ -106,7 +115,10 @@ object Streams {
             val cached = sc.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum
             rec.synchronized { rec.persistPeak = math.max(rec.persistPeak, cached) }
           }
-          rec.synchronized { rec.sinkCalls += ((phase, batch, table, start, end, ok)) }
+          rec.synchronized {
+            rec.sinkCalls += Map("phase" -> phase, "batch" -> batch, "table" -> table,
+              "start" -> start, "end" -> end, "ok" -> ok)
+          }
         }
       }
     } else {
@@ -130,21 +142,6 @@ object Streams {
       Files.readAllLines(f.toPath).asScala.flatMap(l => pat.findFirstMatchIn(l)
         .map(m => (new File(new java.net.URI(m.group(1)).getPath).getName, m.group(2).toLong)))
     }.distinct
-  }
-
-  def writeProgress(out: Json, ps: Seq[(String, StreamingQueryProgress)]): Unit = ps.foreach { case (phase, p) =>
-    out.item {
-      out.field("phase", phase)
-      out.field("batch", p.batchId)
-      out.field("start", java.time.Instant.parse(p.timestamp).toEpochMilli)
-      out.field("rows", p.numInputRows)
-      out.objField("duration_ms") { p.durationMs.asScala.toSeq.sortBy(_._1).foreach { case (k, v) => out.field(k, v.longValue) } }
-      out.field("state_rows", p.stateOperators.map(_.numRowsTotal).sum)
-      out.field("state_memory", p.stateOperators.map(_.memoryUsedBytes).sum)
-      out.field("state_commit_ms", p.stateOperators.map(_.commitTimeMs).sum)
-      out.field("state_update_ms", p.stateOperators.map(_.allUpdatesTimeMs).sum)
-      out.field("late_rows", p.stateOperators.map(_.numRowsDroppedByWatermark).sum)
-    }
   }
 
   /** Copy `names` from `staging` into a fresh backlog directory with
@@ -183,23 +180,23 @@ object Streams {
     try f(c.createStatement()) finally c.close()
   }
 
-  def clearSink(): Unit = withSink(st => StreamJob.tables.foreach(t => st.executeUpdate(s"DELETE FROM $t")))
+  /** Each sink table whose rows add up over triggers: its keys, its count
+    * column, and the batch computation the sum must equal. */
+  val Additive: Seq[(String, Seq[String], String, DataFrame => DataFrame)] = Seq(
+    ("events_per_minute", Seq("minute"), "events_count", MinuteStats.eventsPerMinute),
+    ("event_type_distribution", Seq("minute", "event"), "event_count", MinuteStats.eventTypeDistribution),
+    ("top_items", Seq("minute", "itemid"), "interactions", Items.topItemsPerMinute),
+    ("item_interactions", Seq("itemid"), "interaction_count", Items.itemInteractions),
+    ("most_viewed_items", Seq("itemid"), "view_count", Items.mostViewedItems(_)),
+    ("sessions", Seq("visitorid"), "events_in_session",
+      _.groupBy("visitorid").agg(count(lit(1)).as("events_in_session"))))
 
-  /** Keys and count column of each table whose rows add up over triggers. */
-  def additive(clean: DataFrame): Seq[(String, DataFrame, Seq[String], String)] = Seq(
-    ("events_per_minute", MinuteStats.eventsPerMinute(clean), Seq("minute"), "events_count"),
-    ("event_type_distribution", MinuteStats.eventTypeDistribution(clean), Seq("minute", "event"), "event_count"),
-    ("top_items", Items.topItemsPerMinute(clean), Seq("minute", "itemid"), "interactions"),
-    ("item_interactions", Items.itemInteractions(clean), Seq("itemid"), "interaction_count"),
-    ("most_viewed_items", Items.mostViewedItems(clean), Seq("itemid"), "view_count"),
-    ("sessions", clean.groupBy("visitorid").agg(count(lit(1)).as("events_in_session")),
-      Seq("visitorid"), "events_in_session"))
-
-  def run(o: Opts, work: File, out: Json): Unit = {
+  def run(o: Opts, work: File, out: Out): Unit = {
     val trace = o("trace") == "1"
     val intervalMs = o("interval_ms").toLong
     val fpt = o.int("files_per_trigger")
     val slots = (0 until o.int("slots")).map(i => f"slot-$i%05d.json")
+    val drainFiles = (0 until o.int("drain_files")).map(i => f"drain-$i%05d.json")
     val rawDir = new File(work, "raw").getPath
     val staging = new File(work, "staging")
     val outDir = new File(work, "outputs"); outDir.mkdirs()
@@ -211,28 +208,34 @@ object Streams {
       (s, buildArchive(s, rawDir, staging, intervalMs))
     }
     env(spark, out)
-    val maxMs = clean.agg(max(col("unix_timestamp").cast("long"))).head().getLong(0)
+    val archive = clean.cache()
+    // the open query first reads one trigger's worth of drain files, as warm-up
+    val primer = drainFiles.take(fpt)
+    val openEvents = archive.filter(col("archive_file").startsWith("slot-") ||
+      col("archive_file").isin(primer.map(_.stripSuffix(".json")): _*))
+    val drainEvents = archive.filter(col("archive_file").startsWith("drain-"))
+    val maxMs = archive.agg(max(col("unix_timestamp").cast("long"))).head().getLong(0)
     val sentinels = writeSentinels(staging, maxMs, 2)
-    val checks = additive(clean)
-    def dumpSink(phase: String): Unit = {
-      checks.foreach { case (table, _, keys, value) =>
-        val df = spark.read.jdbc(Sink.url, table, Sink.properties)
-        dump(s"$phase.$table", canonRows(df.select((keys :+ value).map(col): _*)))
+    // read a phase's sink rows back over JDBC, then empty the sink
+    def dumpSink(phase: String): Unit = withSink { st =>
+      Additive.foreach { case (table, keys, value, _) =>
+        val cols = keys :+ value
+        val rs = st.executeQuery(cols.map(c => "\"" + c + "\"").mkString("SELECT ", ", ", s" FROM $table"))
+        val rows = mutable.ArrayBuffer.empty[String]
+        // Spark's Derby dialect stores strings as CLOB
+        def cell(i: Int): Any = rs.getObject(i) match {
+          case c: java.sql.Clob => c.getSubString(1, c.length.toInt)
+          case v => v
+        }
+        while (rs.next()) rows += cols.indices.map(i => canon(cell(i + 1))).mkString("|")
+        dump(s"$phase.$table", rows.toSeq)
       }
-      out.objField(s"sink_rows_$phase") {
-        withSink(st => StreamJob.tables.foreach { t =>
-          val rs = st.executeQuery(s"SELECT COUNT(*) FROM $t"); rs.next(); out.field(t, rs.getLong(1))
-        })
-      }
-      clearSink()
+      out(s"sink_rows_$phase") = StreamJob.tables.map { t =>
+        val rs = st.executeQuery(s"SELECT COUNT(*) FROM $t"); rs.next(); t -> rs.getLong(1)
+      }.toMap
+      StreamJob.tables.foreach(t => st.executeUpdate(s"DELETE FROM $t"))
     }
 
-    // untimed warm-up of both DAGs; it also creates the sink tables
-    val warm = new File(work, "warm")
-    val w = fpt / 4
-    drain(spark, sessions = false, staging, warm, "warm", slots.take(2 * w), w, trace = false)
-    drain(spark, sessions = true, staging, warm, "warm-sessions", slots.take(w), w, trace = false)
-    clearSink()
     val tracer = if (trace) { val t = new Tracer(spark); t.install(); Some(t) } else None
 
     // open loop: the releaser moves files from `outbox` (hard links to the
@@ -244,6 +247,11 @@ object Streams {
     slots.foreach(n => Files.createLink(new File(outbox, n).toPath, new File(staging, n).toPath))
     val openCkpt = new File(work, "open-ckpt")
     val q = startQuery(spark, sessions = false, watch, openCkpt, None, rec, trace)
+    // before the release starts, the query's first trigger reads the primer
+    // files: it pays the query's one-off start-up and compilation costs on
+    // real data, and creates the sink tables
+    primer.foreach(n => Files.createLink(new File(watch, n).toPath, new File(staging, n).toPath))
+    q.processAllAvailable()
     val done = new File(work, "released.done")
     println("READY"); System.out.flush()
     val deadline = now() + o.int("seconds") * 3000L + 60000L
@@ -251,35 +259,33 @@ object Streams {
     try q.processAllAvailable() finally q.stop()
     Bus.drain(spark)
     spark.streams.removeListener(rec)
-    out.field("open_files", filesPerBatch(openCkpt).map { case (f, b) => Seq(f, b.toString) })
+    out("open_files") = filesPerBatch(openCkpt).map { case (f, b) => Seq(f, b) }
     dumpSink("open")
 
     // closed loop: the reference DAG, then sessions, drain the backlog
-    val (capSecs, cap) = drain(spark, sessions = false, staging, work, "cap", slots, fpt, trace)
+    val (capSecs, cap) = drain(spark, sessions = false, staging, work, "cap", drainFiles, fpt, trace)
     dumpSink("cap")
-    val (sessSecs, sess) = drain(spark, sessions = true, staging, work, "sessions", slots ++ sentinels, fpt, trace)
-    out.field("cap_s", capSecs)
-    out.field("sessions_s", sessSecs)
-    out.field("events", clean.count())
-    out.field("checkpoint_bytes", dirBytes(new File(work, "sessions-ckpt")))
-    out.field("persist_peak_bytes", math.max(rec.persistPeak, cap.persistPeak))
-    out.arrField("progress") { writeProgress(out, (rec.progress ++ cap.progress ++ sess.progress).toSeq) }
-    out.arrField("sink_calls") {
-      (rec.sinkCalls ++ cap.sinkCalls).foreach { case (ph, b, t, s, e, ok) =>
-        out.item {
-          out.field("phase", ph); out.field("batch", b); out.field("table", t)
-          out.field("start", s); out.field("end", e); out.field("ok", ok)
-        }
-      }
+    val (sessSecs, sess) = drain(spark, sessions = true, staging, work, "sessions", drainFiles ++ sentinels,
+      fpt, trace)
+    out("cap_s") = capSecs
+    out("sessions_s") = sessSecs
+    out("events_open") = openEvents.count()
+    out("events_drain") = drainEvents.count()
+    out("checkpoint_bytes") = dirBytes(new File(work, "sessions-ckpt"))
+    out("persist_peak_bytes") = math.max(rec.persistPeak, cap.persistPeak)
+    out("progress") = (rec.progress ++ cap.progress ++ sess.progress).toSeq.map { case (phase, p) =>
+      Map("phase" -> phase, "progress" -> parse(p))
     }
+    out("sink_calls") = (rec.sinkCalls ++ cap.sinkCalls).toSeq
     tracer.foreach { t => t.drain(); t.writeJobs(out) }
 
     // the batch computations the stream outputs are checked against
-    checks.foreach { case (table, expected, keys, value) =>
-      dump(s"expected.$table", canonRows(expected.select((keys :+ value).map(col): _*)))
+    for ((archiveName, events) <- Seq("open" -> openEvents, "drain" -> drainEvents);
+         (table, keys, value, batch) <- Additive) {
+      dump(s"expected.$archiveName.$table", canonRows(batch(events).select((keys :+ value).map(col): _*)))
     }
     dump("expected.global_sessions", canonRows(GlobalSessions.sessionWindow(
-      clean.select(col("visitorid"), col("event_time")), streaming = false)))
+      drainEvents.select(col("visitorid"), col("event_time")), streaming = false)))
     dump("sessions.global_sessions", sess.sessionRows.toSeq.sortBy(_._1).flatMap(_._2))
     spark.stop()
 
@@ -287,8 +293,8 @@ object Streams {
     if (trace) {
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
       val one = session(1, work)
-      val (secs, _) = drain(one, sessions = false, staging, work, "local1", slots, fpt, trace = false)
-      out.field("local1_cap_s", secs)
+      val (secs, _) = drain(one, sessions = false, staging, work, "local1", drainFiles, fpt, trace = false)
+      out("local1_cap_s") = secs
       one.stop()
     }
   }

@@ -125,5 +125,41 @@ class ReleaserLateness(unittest.TestCase):
                          {0: 1, 1: 2, 2: 1})
 
 
+class OpenLoopInput(unittest.TestCase):
+    def test_release_sizes_hold_the_offered_rate(self):
+        sizes = run.gen.release_sizes(120, 50, 30)
+        self.assertEqual(sum(sizes), 180)
+        self.assertEqual(sizes[:4], [1, 2, 1, 2])
+        self.assertEqual(run.gen.release_sizes(4, 50, 25), [1, 1, 1, 2])
+
+    def test_empty_slots_refused(self):
+        with self.assertRaises(ValueError):
+            run.gen.release_sizes(10, 50, 10)
+
+
+class TriggerRecords(unittest.TestCase):
+    def test_only_work_inside_a_trigger_counts(self):
+        """Jobs and plans belong to a trigger only when they start inside
+        its interval: the benchmark's own read-back queries between
+        triggers, and jobs of another phase's batch with the same id, do
+        not count."""
+        progress = [dict(phase="cap", batch=0, start=1000, rows=36, duration_ms={"triggerExecution": 500},
+                         state_commit_ms=0, state_update_ms=0, state_rows=0),
+                    dict(phase="cap", batch=1, start=2000, rows=36, duration_ms={"triggerExecution": 400},
+                         state_commit_ms=0, state_update_ms=0, state_rows=0)]
+        job = dict(span="", stages=1, tasks=4, shuffle_write=0, shuffle_read=0, spill=0, skew=1.0,
+                   gc_ms=0, scan_run_ms=0)
+        res = {"jobs": [dict(job, id=1, batch="0", start=1100, end=1300),
+                        dict(job, id=2, batch="1", start=2100, end=2300),
+                        dict(job, id=3, batch="0", start=5000, end=5100)],
+               "plans": [dict(start=1050, ms=7), dict(start=2050, ms=5),
+                         dict(start=1600, ms=300), dict(start=2500, ms=200)]}
+        records, spans = run.trigger_records(res, progress)
+        self.assertEqual([r["jobs"] for r in records], [1, 1])
+        self.assertEqual([r["plan_ms"] for r in records], [7, 5])
+        self.assertEqual([r["gap_ms"] for r in records], [300, 200])
+        self.assertEqual(len(spans), 4)
+
+
 if __name__ == "__main__":
     unittest.main()
