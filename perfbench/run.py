@@ -50,6 +50,7 @@ SENTINEL = "~wm~|"
 
 SETUPS = 3  # set-ups per run; setup_s is their median
 BATCH_PASSES = 3  # timed passes at least, so p75 has ten samples beyond it
+WARM_PASSES = 1  # untimed noop passes before them
 REGISTRY_SCALE = 0.3  # registry tables at 0.3x the shape of the sf0.01 testdata
 # Drain backlog, the same size whatever --seconds is: 40 files of 36 events.
 # The reference DAG (its closed-loop capacity, capacity_eps) and the
@@ -67,8 +68,9 @@ KILL_AFTER_S = 170
 
 
 def cores():
-    """Engine threads: the machine's cores, at most four."""
-    return max(1, min(4, os.cpu_count() or 1))
+    """Engine threads: half the machine's cores, at most four, so the
+    driver, JIT and GC threads and the releaser have cores of their own."""
+    return max(1, min(4, (os.cpu_count() or 1) // 2))
 
 
 def cds_archive(jar, workload):
@@ -93,7 +95,8 @@ def java_cmd(jar, work, args, cds):
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     return (["java"] + opens + cds + [
-        f"-Xmx{HEAP}", f"-Djava.io.tmpdir={tmp}", "-Duser.timezone=UTC",
+        f"-Xmx{HEAP}", "-XX:+UseSerialGC",
+        "-XX:-UseDynamicNumberOfCompilerThreads", f"-Djava.io.tmpdir={tmp}", "-Duser.timezone=UTC",
         f"-Dderby.system.home={work}", f"-Dderby.stream.error.file={os.path.join(work, 'derby.log')}",
         "-cp", os.pathsep.join([jar] + build.spark_classpath()), "perfbench.Harness"]
         + [f"{k}={v}" for k, v in args.items()])
@@ -193,7 +196,7 @@ def batch(jar, work, seed, seconds, trace, pins):
         f.write("\n".join(",".join(o) for o in orders))
     res, _ = run_harness(jar, work, dict(
         workload="batch_registry", cores=cores(), seconds=seconds, trace=trace, setups=SETUPS,
-        orders=os.path.join(work, "orders.txt"), min_passes=BATCH_PASSES))
+        orders=os.path.join(work, "orders.txt"), min_passes=BATCH_PASSES, warm_passes=WARM_PASSES))
     qs = res["queries"]
     failures = {f"{q['name']} pass {q['pass']}": q["error"] for q in qs if q["error"]}
     failures.update({f"{n} output": e for n, e in res["output_errors"].items()})
@@ -206,14 +209,16 @@ def batch(jar, work, seed, seconds, trace, pins):
     passes = sorted({q["pass"] for q in qs})
     pass_s = [(max(q["end"] for q in qs if q["pass"] == p)
                - min(q["start"] for q in qs if q["pass"] == p)) / 1000 for p in passes]
+    pass_cpu_s = [sum(q["cpu_ms"] for q in qs if q["pass"] == p) / 1000 for p in passes]
     lat = [q["end"] - q["start"] for q in qs]
     tail_q = stats.tail_quantile(len(names) * BATCH_PASSES)
     e2e = {"setup_s": (stats.median(res["setup_s"]), len(res["setup_s"])),
+           "cpu_s": (stats.median(pass_cpu_s), len(pass_cpu_s)),
            "total_s": (stats.median(pass_s), len(pass_s)),
            "latency_p50_ms": (stats.percentile(lat, 0.5), len(lat)),
            "latency_tail_ms": (stats.percentile(lat, tail_q), len(lat))}
-    human = [("setup_s", *e2e["setup_s"], "s"), ("total_s", *e2e["total_s"], "s"),
-             ("query_p50_s", e2e["latency_p50_ms"][0] / 1000, len(lat), "s"),
+    human = [("setup_s", *e2e["setup_s"], "s"), ("cpu_s", *e2e["cpu_s"], "s"),
+             ("total_s", *e2e["total_s"], "s"), ("query_p50_s", e2e["latency_p50_ms"][0] / 1000, len(lat), "s"),
              (f"query_{stats.quantile_name(tail_q)}_s", e2e["latency_tail_ms"][0] / 1000, len(lat), "s")]
     layer = batch_layers(res, qs, pins, passes) if trace else None
     return res, e2e, human, len(qs) + len(names), failures, layer, tail_q
@@ -314,19 +319,21 @@ def stream(jar, work, seed, seconds, trace):
     missing, extra = stats.multiset_diff(got, read_rows(work, "expected.global_sessions"))
     if missing or extra:
         failures["sessions"] = f"{len(missing)} missing, {len(extra)} unexpected vs the batch twin"
-    # the drain time is its trigger count at the median trigger time: the
-    # median passes over the query's first trigger, which also starts the
-    # query, and over a trigger a stall of the host stretches
+    # the drain's wall and CPU time are its trigger count at the median
+    # trigger time: the median passes over the query's first trigger, which
+    # also starts the query, and over a trigger a stall of the host stretches
     cap_ms = [p["duration_ms"]["triggerExecution"] for p in phase["cap"] if p["rows"] > 0]
     drain_s = len(cap_ms) * stats.median(cap_ms) / 1000
+    cap_cpu = stats.trigger_cpu_ms([c for c in res["sink_calls"] if c["phase"] == "cap"])
     capacity = drain_events / drain_s
     offered = open_events * 1000 / (slots * INTERVAL_MS)
     e2e = {"setup_s": (stats.median(res["setup_s"]), len(res["setup_s"])),
+           "cpu_s": (len(cap_ms) * stats.median(cap_cpu) / 1000, len(cap_cpu)),
            "total_s": (drain_s, len(cap_ms)),
            "latency_p50_ms": (stats.percentile(lat, 0.5), len(lat)),
            "latency_tail_ms": (stats.percentile(lat, tail_q), len(lat))}
-    human = [("setup_s", *e2e["setup_s"], "s"), ("total_s", *e2e["total_s"], "s"),
-             ("latency_p50_ms", *e2e["latency_p50_ms"], "ms"),
+    human = [("setup_s", *e2e["setup_s"], "s"), ("cpu_s", *e2e["cpu_s"], "s"),
+             ("total_s", *e2e["total_s"], "s"), ("latency_p50_ms", *e2e["latency_p50_ms"], "ms"),
              (f"latency_{stats.quantile_name(tail_q)}_ms", *e2e["latency_tail_ms"], "ms"),
              ("drain_wall_s", res["cap_s"], 1, "s"),
              ("capacity_eps", capacity, len(cap_ms), "1/s"),

@@ -15,7 +15,8 @@ import graft.{SparkEntry, Tables}
   * Passes repeat until `seconds` have elapsed; every pass starts from empty
   * on-disk memos (`java.io.tmpdir` is switched to a fresh directory and the
   * bucketed tables a previous pass registered are dropped). An untimed
-  * first pass collects every output for the digest check. */
+  * first pass collects every output for the digest check, and untimed
+  * noop passes finish warming the JVM. */
 object Batch {
   import Harness._
 
@@ -48,26 +49,29 @@ object Batch {
     }
     env(spark, out)
     out("setup_end") = now()
-    // untimed first pass, three queries at a time: collects every output
-    // for the digest check and leaves the JVM warm for the timed passes
+    // untimed first pass: collects every output for the digest check and
+    // warms the JVM for the timed passes
     val outDir = new File(work, "outputs"); outDir.mkdirs()
     freshMemo(spark, new File(work, "memo/outputs"))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val errors = try {
-      orders.head.map { name =>
-        pool.submit(new java.util.concurrent.Callable[Option[(String, String)]] {
-          def call() = try {
-            val rows = canonRows(SparkEntry.queries(name)(spark, data))
-            Files.write(new File(outDir, s"$name.txt").toPath, rows.asJava)
-            None
-          } catch { case e: Throwable => Some(name -> s"${e.getClass.getName}: ${e.getMessage}".take(500)) }
-        })
-      }.flatMap(_.get())
-    } finally pool.shutdown()
+    val errors = orders.head.flatMap { name =>
+      try {
+        val rows = canonRows(SparkEntry.queries(name)(spark, data))
+        Files.write(new File(outDir, s"$name.txt").toPath, rows.asJava)
+        None
+      } catch { case e: Throwable => Some(name -> s"${e.getClass.getName}: ${e.getMessage}".take(500)) }
+    }
     out("output_errors") = errors.toMap
     out("outputs_end") = now()
-    val tracer = if (o("trace") == "1") { val t = new Tracer(spark); t.install(); Some(t) } else None
     val sc = spark.sparkContext
+    // untimed warm-up passes through the noop sink: the first noop pass
+    // after the output pass ran up to 1.3x slower while the JIT compiled
+    (0 until o.int("warm_passes")).foreach { i =>
+      freshMemo(spark, new File(work, s"memo/warm-$i"))
+      orders(orders.size - 1 - i).foreach(name =>
+        SparkEntry.queries(name)(spark, data).write.format("noop").mode("overwrite").save())
+    }
+    out("warm_end") = now()
+    val tracer = if (o("trace") == "1") { val t = new Tracer(spark); t.install(); Some(t) } else None
     val budgetMs = o.int("seconds") * 1000L
     val t0 = now()
     var pass = 0
@@ -79,12 +83,14 @@ object Batch {
         val before = memoEntries(memo).toSet
         sc.setLocalProperty(SpanKey, s"q:$pass:$name")
         val start = now()
+        val cpu0 = cpuMs()
         val err = try {
           SparkEntry.queries(name)(spark, data).write.format("noop").mode("overwrite").save(); ""
         } catch { case e: Throwable => s"${e.getClass.getName}: ${e.getMessage}".take(500) }
+        val cpu = cpuMs() - cpu0
         val end = now()
         sc.setLocalProperty(SpanKey, null)
-        queries += Map("name" -> name, "pass" -> pass, "start" -> start, "end" -> end, "error" -> err,
+        queries += Map("name" -> name, "pass" -> pass, "start" -> start, "end" -> end, "cpu_ms" -> cpu, "error" -> err,
           "memo_new" -> memoEntries(memo).filterNot(before), "memo_bytes" -> dirBytes(memo))
       }
       pass += 1

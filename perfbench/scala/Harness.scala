@@ -41,6 +41,29 @@ object Harness {
 
   def now(): Long = System.currentTimeMillis()
 
+  private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** The JIT compiler's threads (a fixed set: `run.py` turns off their
+    * dynamic creation), by their `/proc/self/task` directory. */
+  private lazy val jitThreads: Seq[File] =
+    Option(new File("/proc/self/task").listFiles).toSeq.flatten.filter { t =>
+      val comm = try Files.readString(new File(t, "comm").toPath) catch { case _: java.io.IOException => "" }
+      comm.startsWith("C1 CompilerThre") || comm.startsWith("C2 CompilerThre")
+    }
+
+  /** CPU time of this JVM so far in ms: every thread, the JIT compiler's
+    * left out. JIT work is warm-up whose amount follows the host's speed
+    * rather than the engine. On a virtual machine the figure also leaves
+    * out the time the host ran other guests on our vCPUs. */
+  def cpuMs(): Double = {
+    val jitNs = jitThreads.map { t =>
+      try Files.readString(new File(t, "schedstat").toPath).trim.split(' ')(0).toLong
+      catch { case _: java.io.IOException => 0L }
+    }.sum
+    (os.getProcessCpuTime - jitNs) / 1e6
+  }
+
   def main(args: Array[String]): Unit = {
     val o = Opts(args.map { a => val i = a.indexOf('='); a.take(i) -> a.drop(i + 1) }.toMap)
     val work = new File(o("work")).getAbsoluteFile

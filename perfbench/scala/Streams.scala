@@ -110,6 +110,7 @@ object Streams {
         try { Sinks.jdbcAppendArrays(df, table, Sink); ok = true }
         finally {
           val end = now()
+          val cpu = cpuMs()
           if (trace) {
             sc.setLocalProperty(SpanKey, null)
             val cached = sc.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum
@@ -117,7 +118,7 @@ object Streams {
           }
           rec.synchronized {
             rec.sinkCalls += Map("phase" -> phase, "batch" -> batch, "table" -> table,
-              "start" -> start, "end" -> end, "ok" -> ok)
+              "start" -> start, "end" -> end, "cpu_end" -> cpu, "ok" -> ok)
           }
         }
       }

@@ -119,6 +119,20 @@ def release_lateness(schedule):
     return (max(late) if late else 0.0), median(late)
 
 
+def trigger_cpu_ms(sink_calls):
+    """CPU time of each trigger of a closed-loop drain, from the process CPU
+    time stamped at the end of every sink call (``batch``, ``cpu_end``).
+    Triggers run back to back, so a trigger's CPU time runs from the end of
+    the previous trigger's last sink call to the end of its own and covers
+    one whole trigger. The first trigger, which also starts the query, gets
+    no sample."""
+    last = {}
+    for c in sink_calls:
+        last[c["batch"]] = max(last.get(c["batch"], c["cpu_end"]), c["cpu_end"])
+    ends = [last[b] for b in sorted(last)]
+    return [b - a for a, b in zip(ends, ends[1:])]
+
+
 def backlog_at_triggers(release_ms, file_batch, trigger_starts):
     """Files released but not yet taken by an earlier trigger, at the start
     of each trigger. ``release_ms`` maps file -> actual release time,

@@ -161,5 +161,17 @@ class TriggerRecords(unittest.TestCase):
         self.assertEqual(len(spans), 4)
 
 
+class TriggerCpu(unittest.TestCase):
+    def test_cpu_runs_from_previous_trigger_end(self):
+        """A trigger's CPU time runs from the last sink call of the trigger
+        before it to its own last one, whatever order the calls arrive in;
+        the first trigger gets no sample."""
+        calls = [dict(batch=1, cpu_end=2500.0), dict(batch=0, cpu_end=1000.0),
+                 dict(batch=0, cpu_end=1200.0), dict(batch=1, cpu_end=2700.0),
+                 dict(batch=2, cpu_end=3900.0)]
+        self.assertEqual(stats.trigger_cpu_ms(calls), [1500.0, 1200.0])
+        self.assertEqual(stats.trigger_cpu_ms(calls[1:3]), [])
+
+
 if __name__ == "__main__":
     unittest.main()
