@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -11,265 +9,62 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Machine context at one instant: (1-min loadavg, total process count,
-    * OTHER live java/sbt JVM count — self excluded). Rounds 2–6 all saw
-    * the driver's single-run artifact inflated by CONCURRENT host load
-    * (520 s driver vs 127 s idle-machine judge re-run in r6); stamping
-    * the run with its environment makes that adjudication mechanical —
-    * a bench line carrying load≈30 and 3 sibling JVMs classifies itself.
-    * Best-effort: any probe failure reports -1, never throws. */
-  private def machineCtx(): (Double, Int, Int) = {
-    val load =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    val pids =
-      try new java.io.File("/proc").listFiles.filter(_.getName.forall(_.isDigit))
-      catch { case _: Throwable => null }
-    val procs = if (pids == null) -1 else pids.length
-    val self = ProcessHandle.current().pid()
-    // A JVM is a process whose EXECUTABLE is java — read /proc/<pid>/exe,
-    // not the cmdline. Substring-matching the cmdline ("java"/"sbt")
-    // counted any process whose ARGUMENTS merely mention those words
-    // (an orchestration wrapper carrying a prose prompt did exactly
-    // that in round 9, stamping 3 phantom JVMs onto every idle run and
-    // mis-flagging a clean sweep as contaminated). The exe symlink is
-    // only readable for SAME-USER processes, so on a shared host a
-    // swallowed AccessDenied would under-count other users' JVMs — the
-    // opposite failure mode; fall back to /proc/<pid>/comm
-    // (world-readable, value "java") when the link is unreadable.
-    val javas =
-      if (pids == null) -1
-      else pids.count { f =>
-        f.getName.toLong != self && {
-          (try {
-            val exe = java.nio.file.Files.readSymbolicLink(
-              java.nio.file.Paths.get(s"/proc/${f.getName}/exe")).toString
-            Some(exe.endsWith("/java"))
-          } catch { case _: Throwable => None }).getOrElse {
-            try java.nio.file.Files.readString(
-              java.nio.file.Paths.get(s"/proc/${f.getName}/comm")).trim == "java"
-            catch { case _: Throwable => false }
-          }
-        }
-      }
-    (load, procs, javas)
+  /** 1-minute load average, -1 when unreadable: stamped into the result at
+    * start and end so a run from a loaded window says so. */
+  private def loadAvg(): Double =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
+      .split("\\s+")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
+  /** Headline of per-query readings: (sum of the successful readings,
+    * number of failed queries). A failed query reads -1; adding it in
+    * would make a run with failures read faster. */
+  def total(results: Seq[(String, Double)]): (Double, Int) = {
+    val (failed, ok) = results.partition(_._2 < 0)
+    (ok.map(_._2).sum, failed.size)
   }
 
-  /** Bounded quiet-start gate (spec-pinned): poll `readLoad` until the
-    * 1-min loadavg drops below `gate` or `budgetS` seconds elapse. Returns
-    * (final load, seconds waited, opened?). BENCH_r15 and BENCH_r17 both
-    * shipped from loaded windows — the tools protocols (local_bench.py,
-    * sweep.py) gate their launches but the driver invokes Bench directly,
-    * so the gate has to live HERE to cover every entry path. Load-only
-    * (no JVM term): at launch there is no sibling-count baseline to delta
-    * against, and the sbt parent is itself always one sibling java
-    * process. A negative load (probe failure) opens immediately — an
-    * unmeasurable machine must proceed with the honest stamp, not hang. */
-  def waitForQuiet(gate: Double, budgetS: Int, pollMs: Long,
-                   readLoad: () => Double,
-                   sleep: Long => Unit = Thread.sleep): (Double, Int, Boolean) = {
-    var waited = 0L
-    var load = readLoad()
-    while (load >= gate && waited < budgetS * 1000L) {
-      sleep(pollMs)
-      waited += pollMs
-      load = readLoad()
+  /** The two result lines: the complete JSON for the result file, and the
+    * stdout line. The full per-query dict (140+ entries) does not fit the
+    * consumer's 2000-char stdout tail window (r1/r3/r4 artifacts all came
+    * back "parsed": null with the line's FRONT cut off), so the stdout line
+    * is SELF-LIMITING: the contract fields plus as many per-query entries
+    * as fit 1700 chars (the tail window less sbt's epilogue and a margin),
+    * most expensive first (the perf signal), and the count omitted. */
+  def render(results: Seq[(String, Double)], rowCounts: Seq[(String, Long)],
+             runs: Int, load: (Double, Double), sfDir: String): (String, String) = {
+    val budget = 1700
+    val (sum, failed) = total(results)
+    val (l0, l1) = load
+    val fullQs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+      .mkString("{", ",", "}")
+    val rowsJson =
+      if (rowCounts.isEmpty) ""
+      else rowCounts.map { case (k, n) => "\"" + k + "\":" + n }
+        .mkString(",\"rows\":{", ",", "}")
+    val full = f"""{"metric":"total","value":$sum%.3f,"failed":$failed,"unit":"sec","runs":$runs,"env":{"load_start":$l0%.2f,"load_end":$l1%.2f},"queries":$fullQs$rowsJson,"sf":"$sfDir"}"""
+    def fmt(v: Double): String = {
+      val s = f"$v%.2f"
+      if (s.endsWith("0") && s.contains('.')) s.dropRight(1) else s
     }
-    (load, (waited / 1000L).toInt, load < gate)
-  }
-
-  /** The JDK-17 module opens Spark 4 needs outside spark-submit — same
-    * list as build.sbt / tools/run.sh (launcher JavaModuleOptions). */
-  val Jdk17AddOpens: Seq[String] = Seq(
-    "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-    "java.net", "java.nio", "java.util", "java.util.concurrent",
-    "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-    "sun.security.action", "sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-
-  /** Classpath for a forked child Bench: this build's classes directory
-    * (from Bench's own code source) plus every jar next to Spark's
-    * (tools/run.sh reconstructs the same set from the filesystem; deriving
-    * it from loaded classes works under sbt, run.sh, and tests alike).
-    * None when either location can't be resolved — the caller falls back
-    * to a same-JVM advisory retry rather than crashing the bench. */
-  def childClasspath(): Option[String] = {
-    def loc(c: Class[_]): Option[java.io.File] =
-      try Option(c.getProtectionDomain.getCodeSource)
-        .map(cs => new java.io.File(cs.getLocation.toURI))
-      catch { case _: Throwable => None }
-    for {
-      classes <- loc(Bench.getClass)
-      sparkJar <- loc(classOf[org.apache.spark.sql.SparkSession])
-      jars = Option(sparkJar.getParentFile.listFiles).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".jar")).map(_.getPath).sorted
-      if jars.nonEmpty
-    } yield (classes.getPath +: jars.toSeq).mkString(java.io.File.pathSeparator)
-  }
-
-  /** Run the named queries in a FRESH child JVM (one JVM for the whole
-    * batch) and return its per-query seconds. This is the retry pass's
-    * measurement vehicle: r17 proved a same-JVM retry can CONFIRM a
-    * phantom regression — q_trigram_logprob retried at 11.39 s under a
-    * quiet (load, jvms) stamp because the retry executed inside the JVM
-    * the 142-query suite had just degraded (heap/code-cache/GC state that
-    * clearCache() does not reset), while a fresh JVM reads 3.36 s. The
-    * child is Bench itself with ONLY= the batch, REF=none (no recursive
-    * retries), GATE_WAIT=0 (the parent already load-gated), and its own
-    * warm-up — i.e. exactly the idle-probe protocol the judge uses to
-    * adjudicate. Child stdout is discarded (the parent owns the one-line
-    * JSON contract); stderr passes through. Empty map on any failure. */
-  def forkBenchOnly(names: Seq[String], sfDir: String, outFile: java.io.File,
-                    runs: Int, cpus: String,
-                    timeoutS: Long = 1800): Map[String, Double] =
-    childClasspath() match {
-      case None => Map.empty
-      case Some(cp) =>
-        val javaBin = new java.io.File(
-          new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
-        val cmd = Seq(javaBin) ++ Jdk17AddOpens ++ Seq(
-          s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-          "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-          "-cp", cp, "graft.Bench")
-        val pb = new ProcessBuilder(cmd: _*)
-        val env = pb.environment()
-        env.put("SPARK_GRAFT_SF_DIR", sfDir)
-        env.put("SPARK_GRAFT_CPUS", cpus)
-        env.put("SPARK_GRAFT_BENCH_ONLY", names.mkString(","))
-        env.put("SPARK_GRAFT_BENCH_RUNS", runs.toString)
-        env.put("SPARK_GRAFT_BENCH_REF", "none")
-        env.put("SPARK_GRAFT_BENCH_OUT", outFile.getAbsolutePath)
-        env.put("SPARK_GRAFT_BENCH_GATE_WAIT", "0")
-        // the batch is an explicit allowlist; a leaked suite-level skip or
-        // untimed-rows request must not distort the child's measurements
-        env.remove("SPARK_GRAFT_BENCH_SKIP")
-        env.remove("SPARK_GRAFT_BENCH_ROWS")
-        pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        try {
-          val p = pb.start()
-          val done = p.waitFor(timeoutS, java.util.concurrent.TimeUnit.SECONDS)
-          if (!done) { p.destroyForcibly(); Map.empty }
-          else if (p.exitValue() != 0 || !outFile.isFile) Map.empty
-          else parseRefQueries(java.nio.file.Files.readString(outFile.toPath))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] fork retry failed: ${e.getMessage}")
-          Map.empty
-        }
+    def line(qs: String, omitted: String) =
+      f"""{"metric":"total","value":${fmt(sum)},"failed":$failed,"unit":"sec","runs":$runs,"env":{"load":[$l0%.1f,$l1%.1f]},"queries":$qs,"omitted":$omitted,"full":"bench.json","sf":"$sfDir"}"""
+    var used = line("{}", "00").length
+    val kept = scala.collection.mutable.ArrayBuffer[(String, Double)]()
+    results.sortBy(-_._2).foreach { case (k, v) =>
+      val cost = k.length + 4 + fmt(v).length + (if (kept.nonEmpty) 1 else 0)
+      if (used + cost <= budget) { kept += ((k, v)); used += cost }
     }
-
-  /** Adjudicated headline (spec-pinned): the suite total with every
-    * retried query at min(suite, retry). The consumer of the compact
-    * stdout line previously saw only the contaminated raw total (r17:
-    * 241.0 s) and had to open bench.json to learn the artifact's own
-    * retries had refuted it; the adjusted value makes a contaminated
-    * window self-reporting. Failed retries (sec <= 0) change nothing. */
-  def adjustedTotal(results: Seq[(String, Double)],
-                    retrySecs: Map[String, Double]): Double =
-    results.map { case (n, v) =>
-      retrySecs.get(n).filter(_ > 0).map(math.min(v, _)).getOrElse(v)
-    }.sum
-
-  /** Cumulative GC milliseconds across all collectors — the degradation
-    * signal a (load, jvms) stamp cannot see (r17's phantom retry). */
-  private def totalGcMs(): Long =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
-    } catch { case _: Throwable => -1L }
-
-  /** Parse the flat `"queries":{"q_x":1.234,...}` dict out of a bench
-    * artifact (ours or local_bench.py's — both write plain name→number
-    * with no nesting inside the dict). Dependency-free by design: the
-    * format is this repo's own, and the parser is spec-pinned
-    * (BenchRetrySpec) so format drift breaks a test, not the retry pass.
-    * Returns empty on any malformed input — a broken reference must
-    * degrade to "no retries", never crash the bench. */
-  def parseRefQueries(json: String): Map[String, Double] = {
-    val start = json.indexOf("\"queries\"")
-    if (start < 0) Map.empty
-    else {
-      val open = json.indexOf('{', start)
-      val close = if (open < 0) -1 else json.indexOf('}', open)
-      if (close < 0) Map.empty
-      else {
-        // Exponent is its own group with an optional sign: the old
-        // character-class form (`[\d.eE+]+`) stopped before a NEGATIVE
-        // exponent's '-', captured `1.2e` for `1.2e-05`, failed toDouble,
-        // and silently dropped the entry — permanently exempting any
-        // sub-1e-4 reference timing (json.dump emits e-notation there)
-        // from the retry pass.
-        val entry = """"([^"]+)"\s*:\s*(-?[\d.]+(?:[eE][-+]?\d+)?)""".r
-        entry.findAllMatchIn(json.substring(open + 1, close))
-          .flatMap(m => scala.util.Try(m.group(1) -> m.group(2).toDouble).toOption)
-          .toMap
-      }
-    }
+    // stable name order for round-over-round diffs
+    val qs = kept.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    (full, line(qs, (results.size - kept.size).toString))
   }
-
-  /** Latest BENCH_LOCAL_r{N}[suffix].json in `dir` by round number (suffix
-    * breaks ties lexicographically — r10b beats r10). The default retry
-    * reference: the most recent idle-host 3-JVM protocol artifact. */
-  def latestLocalBench(dir: java.io.File): Option[java.io.File] = {
-    val pat = """BENCH_LOCAL_r(\d+)([a-z]?)\.json""".r
-    Option(dir.listFiles).getOrElse(Array.empty).flatMap { f =>
-      f.getName match {
-        case pat(n, s) => Some(((n.toInt, s), f))
-        case _ => None
-      }
-    }.sortBy(_._1).lastOption.map(_._2)
-  }
-
-  /** Outlier-retry selection rule (spec-pinned): a query earns a re-run
-    * when its suite reading exceeds BOTH kRatio× its reference reading
-    * AND the reference by more than absFloor seconds — the ratio alone
-    * would retry 50 ms queries that tripled on scheduler noise, the
-    * floor alone would retry every genuinely-slow query on a slightly
-    * loaded box. Worst inflation first, capped (a fully-contaminated
-    * window would otherwise retry the entire suite and double the bench).
-    * Returns (name, suiteSec, refSec). Queries missing from the
-    * reference or non-positive on either side never qualify. */
-  def retryCandidates(results: Seq[(String, Double)], ref: Map[String, Double],
-                      kRatio: Double, absFloor: Double, cap: Int)
-      : Seq[(String, Double, Double)] =
-    results.flatMap { case (n, cur) =>
-      ref.get(n) match {
-        case Some(r) if cur > 0 && r > 0 && cur > kRatio * r && cur - r > absFloor =>
-          Some((n, cur, r))
-        case _ => None
-      }
-    }.sortBy { case (_, cur, r) => -cur / r }.take(cap)
 
   def main(args: Array[String]): Unit = {
-    // quiet-start gate BEFORE any Spark work: wait (bounded) for the 1-min
-    // load to decay so the suite doesn't launch inside another process's
-    // tail (BENCH_r15/r17 both shipped from loaded windows; the tools
-    // protocols gate their own launches but the driver path had no gate).
-    // Proceeds after the budget with the honest env stamp either way; the
-    // gate record below keeps the giving-up visible in the artifact.
-    val gateThresh = sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE", "2.0").toDouble
-    val gateBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE_WAIT", "300").toInt
-    val preLoad = machineCtx()._1
-    val (gateLoad, gateWaited, gateOpened) =
-      waitForQuiet(gateThresh, gateBudget, 5000L, () => machineCtx()._1)
-    if (gateWaited > 0)
-      System.err.println(f"[bench] launch gate: load $preLoad%.2f -> $gateLoad%.2f " +
-        s"after ${gateWaited}s (opened=$gateOpened)")
-    val ctxStart = machineCtx()
+    val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // same extensions the Verify gate runs under (and a user's session
-      // would load): bench must measure the shipped plan shapes
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus(32)).getOrCreate()
     // ERROR: the one-line JSON contract — WARN noise (WindowExec on the
     // k-row rank window, AQE notices) would bury the result line
     spark.sparkContext.setLogLevel("ERROR")
@@ -328,154 +123,7 @@ object Bench {
         spark.catalog.clearCache()
         name -> n
       }
-    // Outlier-retry pass — the bench's self-defense against a LOADED
-    // WINDOW (r15: the driver artifact shipped with load 1.9→3.6 and five
-    // 3–20× spikes that an idle re-run disproved; min-of-2 defends only
-    // against a one-off spike, because a contaminated window spans both
-    // repeats). Any query whose suite reading exceeds the retry rule vs a
-    // REFERENCE artifact (env-pointed; default: the latest idle-host
-    // BENCH_LOCAL_r*.json next to the output file) gets ONE load-gated
-    // re-run appended under "retries" — so the artifact adjudicates its
-    // own contamination inside a single driver invocation: a fast retry
-    // means the suite reading was environmental, a slow retry under a
-    // quiet stamp means a real regression. SPARK_GRAFT_BENCH_REF=none
-    // disables (local_bench.py sets it: the 3-JVM protocol's defense is
-    // its cross-JVM median, and its runs must stay pure timing).
-    val refSetting = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "")
-    val refFile: Option[java.io.File] =
-      if (refSetting == "none") None
-      else if (refSetting.nonEmpty) Some(new java.io.File(refSetting)).filter(_.isFile)
-      else latestLocalBench(java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json"))
-        .toAbsolutePath.getParent.toFile)
-    val retryK = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_K", "3.0").toDouble
-    val retryCap = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_CAP", "10").toInt
-    val refQueries = refFile.map(f =>
-      parseRefQueries(java.nio.file.Files.readString(f.toPath))).getOrElse(Map.empty)
-    val candidates = retryCandidates(results, refQueries, retryK,
-      absFloor = 0.5, cap = retryCap)
-    // (name, orig, ref, sec, load, jvms, mode, gcDeltaMs)
-    val retries: Seq[(String, Double, Double, Double, Double, Int, String, Long)] =
-      if (candidates.isEmpty) Seq.empty
-      else {
-        // load gate: wait (bounded) for the 1-min load to decay and any
-        // sibling JVMs to exit, so the retry measures the machine the
-        // reference was measured on; the retry stamps its own (load,
-        // jvms) either way — a gate that gave up still classifies itself
-        val gate = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_GATE", "2.0").toDouble
-        val waitBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_WAIT", "150").toInt
-        val deadline = System.nanoTime() + waitBudget * 1000000000L
-        // The JVM term gates on the DELTA vs the bench-start count, not on
-        // zero: under sbt the parent launcher is itself a sibling java
-        // process (every BENCH_LOCAL artifact stamps other_jvms = 1), so a
-        // `> 0` condition could never clear and the gate would silently
-        // sleep its whole wait budget on a perfectly idle machine.
-        var ctx = machineCtx()
-        while ((ctx._1 > gate || ctx._3 > ctxStart._3) && ctx._1 >= 0 &&
-               System.nanoTime() < deadline) {
-          Thread.sleep(5000)
-          ctx = machineCtx()
-        }
-        System.err.println(s"[bench] retrying ${candidates.size} outlier(s) vs " +
-          s"${refFile.map(_.getName).getOrElse("?")} (load ${ctx._1}, " +
-          s"sibling jvms ${ctx._3}): " + candidates.map(_._1).mkString(","))
-        // Primary vehicle: ONE fresh child JVM for the whole batch. The
-        // r17 postmortem proved the suite JVM itself is a contaminant —
-        // its retry of q_trigram_logprob read 11.39 s under a quiet
-        // (load, jvms) stamp (142 queries of accumulated heap/code-cache/
-        // GC state) while a fresh JVM reads 3.36 s. A forked retry IS the
-        // judge's idle-probe protocol, so the artifact adjudicates all
-        // its own spikes instead of leaving one to a manual probe.
-        val tmpOut = java.io.File.createTempFile("graft_bench_retry", ".json")
-        tmpOut.delete()
-        val (loadF, _, jvmsF) = machineCtx()
-        val forked = forkBenchOnly(candidates.map(_._1), sfDir, tmpOut, runs, cpus)
-        tmpOut.delete()
-        if (forked.nonEmpty)
-          candidates.map { case (name, orig, ref) =>
-            (name, orig, ref, forked.getOrElse(name, -1.0), loadF, jvmsF, "fork", -1L)
-          }
-        else {
-          // fallback (classpath unresolvable / child died): same-JVM
-          // retries, labelled ADVISORY and stamped with the GC delta —
-          // the degradation signal the (load, jvms) stamp cannot carry
-          System.err.println("[bench] fork retry unavailable — falling back " +
-            "to same-JVM ADVISORY retries (readings inherit suite-JVM state)")
-          candidates.map { case (name, orig, ref) =>
-            spark.catalog.clearCache()
-            val (load, _, jvms) = machineCtx()
-            val gc0 = totalGcMs()
-            val t0 = System.nanoTime()
-            val sec =
-              try { SparkEntry.queries(name)(spark, sfDir)
-                      .write.format("noop").mode("overwrite").save()
-                    (System.nanoTime() - t0) / 1e9 }
-              catch { case e: Throwable =>
-                System.err.println(s"[bench] retry $name failed: ${e.getMessage}"); -1.0 }
-            (name, orig, ref, sec, load, jvms, "same_jvm_advisory", totalGcMs() - gc0)
-          }
-        }
-      }
-    val retriesJson =
-      if (retries.isEmpty) ""
-      else retries.map { case (n, orig, ref, sec, load, jvms, mode, gcMs) =>
-        f""""$n":{"orig":$orig%.3f,"ref":$ref%.3f,"sec":$sec%.3f,"load":$load%.2f,"jvms":$jvms,"mode":"$mode"""" +
-          (if (mode == "fork") "}" else s""","gc_delta_ms":$gcMs}""")
-      }.mkString(",\"retries\":{", ",", "}") +
-        s""","retry_ref":"${refFile.map(_.getName).getOrElse("")}""""
-    val ctxEnd = machineCtx()
-    // environment stamp: loadavg + total procs + sibling JVMs at start/end
-    // — lets the judge classify a contaminated run without a re-run. The
-    // full form also records the launch gate (pre-gate load, seconds
-    // waited, opened?) so a run that launched hot despite the gate says so.
-    def envJson(compact: Boolean): String = {
-      val (l0, p0, j0) = ctxStart; val (l1, p1, j1) = ctxEnd
-      if (compact) f""""env":{"load":[$l0%.1f,$l1%.1f],"jvms":[$j0,$j1]}"""
-      else f""""env":{"load_start":$l0%.2f,"load_end":$l1%.2f,"procs_start":$p0,"procs_end":$p1,"other_jvms_start":$j0,"other_jvms_end":$j1,"gate":{"pre_load":$preLoad%.2f,"waited_s":$gateWaited,"opened":$gateOpened}}"""
-    }
-    val total = results.map(_._2).sum
-    // adjudicated headline: each retried query at min(suite, retry) — the
-    // compact consumer sees the artifact refute its own contamination
-    // instead of having to open bench.json ("value_adjusted" only when
-    // retries ran; equal to "value" when every retry confirmed the suite)
-    val adjJson =
-      if (retries.isEmpty) ""
-      else {
-        val adj = adjustedTotal(results,
-          retries.map { case (n, _, _, sec, _, _, _, _) => n -> sec }.toMap)
-        f""","value_adjusted":$adj%.3f"""
-      }
-    val fullQs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val rowsJson =
-      if (rowCounts.isEmpty) ""
-      else rowCounts.map { case (k, n) => "\"" + k + "\":" + n }
-        .mkString(",\"rows\":{", ",", "}")
-    val fullJson = f"""{"metric":"total","value":$total%.3f$adjJson,"unit":"sec","runs":$runs,${envJson(compact = false)},"queries":$fullQs$rowsJson$retriesJson,"sf":"$sfDir"}"""
-    // The full per-query dict (84+ entries, ~2.2 KB) no longer fits the
-    // consumer's 2000-char stdout tail window (r1/r3/r4 artifacts all came
-    // back "parsed": null with the line's FRONT cut off). The stdout line
-    // must therefore be SELF-LIMITING: keep the contract fields and as many
-    // per-query entries as fit a conservative budget, most expensive first
-    // (the perf signal), and say how many were omitted. The complete
-    // full-precision JSON goes to bench.json (path env-overridable).
-    val budget = 1700 // tail window 2000 − sbt epilogue − safety margin
-    def fmt(v: Double): String = {
-      val s = f"$v%.2f"
-      if (s.endsWith("0") && s.contains('.')) s.dropRight(1) else s
-    }
-    val byCost = results.sortBy(-_._2)
-    val frame = f"""{"metric":"total","value":${fmt(total)}$adjJson,"unit":"sec","runs":$runs,${envJson(compact = true)},"queries":{},"omitted":00,"retried":${retries.size},"full":"bench.json","sf":"$sfDir"}"""
-    var used = frame.length
-    val kept = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    byCost.foreach { case (k, v) =>
-      val cost = k.length + 4 + fmt(v).length + (if (kept.nonEmpty) 1 else 0)
-      if (used + cost <= budget) { kept += ((k, v)); used += cost }
-    }
-    val keptSorted = kept.sortBy(_._1) // stable name order for round-over-round diffs
-    val qs = keptSorted.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val json = f"""{"metric":"total","value":${fmt(total)}$adjJson,"unit":"sec","runs":$runs,${envJson(compact = true)},"queries":$qs,"omitted":${results.size - kept.size},"retried":${retries.size},"full":"bench.json","sf":"$sfDir"}"""
+    val (full, line) = render(results, rowCounts, runs, (loadStart, loadAvg()), sfDir)
     // Persist the complete line to a file FIRST (survives any console
     // truncation); resolve + log the absolute destination so an unexpected
     // CWD (and the overwrite of a pre-existing bench.json) is visible
@@ -483,9 +131,9 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")).toAbsolutePath
     System.err.println(s"[bench] writing full result JSON to $out" +
       (if (java.nio.file.Files.exists(out)) " (overwriting existing file)" else ""))
-    try java.nio.file.Files.write(out, fullJson.getBytes("UTF-8"))
+    try java.nio.file.Files.write(out, full.getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
-    println(json)
+    println(line)
     System.out.flush()
     spark.stop()
   }

@@ -404,8 +404,6 @@ object Dedup {
           if (s.compareTo(prevSum) == 0) converged = true
           prevSum = s
       }
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $round sum=$prevSum t=${System.nanoTime() / 1000000}")
     }
     if (!converged) {
       // the fixpoint may have been reached EXACTLY at round maxRounds (the

@@ -50,7 +50,7 @@ object TextAnalysis {
   /** The built-in-only tokenize this engine started with: a per-row regex
     * compile inside `String.split` plus two intermediate string copies.
     * Kept as the reference model for the [[withTokens]] parity test and
-    * the A/B in tools/TokenBench. */
+    * the A/B recorded in PLANS.md round-9 §3. */
   def splitTokens(textCol: String): Column =
     split(trim(lower(col(textCol))), "\\s+")
 
@@ -314,12 +314,8 @@ object TextAnalysis {
    * Serialized blocks are a handful of byte arrays per partition; the
    * per-round deserialize cost is one pass over data the phase scans
    * anyway. */
-  // GRAFT_BPE_DESER_CKPT=1 restores the deserialized level — the A/B
-  // reproduction arm for the GC measurement, like GRAFT_BPE_NO_FREE
-  private[graft] def CheckpointLevel =
-    if (sys.env.contains("GRAFT_BPE_DESER_CKPT"))
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+  private[graft] val CheckpointLevel =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   def bpeTrainMergesCarried(docs: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
@@ -1217,7 +1213,8 @@ object TextAnalysis {
 
   /** The chained-regexp_replace scrub this engine started with: three
     * Matcher passes per row, each with a UTF-16 round-trip. Reference
-    * model for [[scrub]]'s parity test and the A/B in tools/AbBench. */
+    * model for [[scrub]]'s parity test and the A/B recorded in PLANS.md
+    * round-9 §5. */
   def scrubRegex(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),

@@ -15,10 +15,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * `java.lang.String.split`, which has no fast path for `"\s+"` — it
  * compiles the regex PER ROW, after materializing the UTF8String into a
  * java String (and `lower`/`trim` each allocate their own intermediate
- * copy first). The round-9 TopKProbe put the tokenize+explode floor at
- * ~4 s of the 5.9 s sf10 q_spacesaving_topk wall — shared with every
- * text-grain query in the engine. This expression does lowercase + trim +
- * split in one pass over the raw bytes, no regex, no java String.
+ * copy first). The round-9 stage split (PLANS.md round-9 §1) put the
+ * tokenize+explode floor at ~4 s of the 5.9 s sf10 q_spacesaving_topk
+ * wall — shared with every text-grain query in the engine. This
+ * expression does lowercase + trim + split in one pass over the raw
+ * bytes, no regex, no java String.
  *
  * Semantics are BYTE-IDENTICAL to `split(trim(lower(s)), "\\s+")`,
  * including the edges (pinned by a property test vs the built-in form):

@@ -90,8 +90,8 @@ case class ApproxPercentileRewrite() extends Rule[LogicalPlan] {
  * tokenize map floor: `whitespacetokens(text)`, hashed shingles, …),
  * predicate pushdown substitutes the FULL expression into the filter, so
  * every text-grain explode evaluates the tokenize TWICE per row — filter
- * then project (codegen CSE dedups only within one operator). Measured in
- * tools/TokenBench at sf10: stripping halves the explode path (2.04 →
+ * then project (codegen CSE dedups only within one operator). Measured at
+ * sf10 (PLANS.md round-9 §3): stripping halves the explode path (2.04 →
  * 1.01 s over 27M tokens).
  *
  * Semantics-preserving by construction: `Generate(outer=false)` already

@@ -1,14 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
  * Stage split for [[graft.ext.TextAnalysis.bpeTrainMergesCarried]] —
- * the r10 follow-up to the r9 TopKProbe methodology (VERDICT r9 item 4:
- * "separate pair-count shuffle from the driver-side winner loop; fix or
- * adjudicate"). Replays the trainer's exact phases with a timer between
- * each materialization barrier:
+ * the r10 follow-up to the r9 stage-split methodology (PLANS.md round-9
+ * §1; VERDICT r9 item 4: "separate pair-count shuffle from the
+ * driver-side winner loop; fix or adjudicate"). Replays the trainer's
+ * exact phases with a timer between each materialization barrier:
  *
  *   prep      tokenize → posexplode → repartition(doc_id) →
  *             sortWithinPartitions → localCheckpoint(true)
@@ -29,15 +28,7 @@ object BpeTrainProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val rounds = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Session.builder(graft.Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -119,9 +110,7 @@ object BpeTrainProbe {
           }.localCheckpoint(true, graft.ext.TextAnalysis.CheckpointLevel)
         }
         // mirror the operator's r10 fix: free the superseded generation
-        // (toggle with GRAFT_BPE_NO_FREE=1 to reproduce the pileup arm)
-        if (!sys.env.contains("GRAFT_BPE_NO_FREE"))
-          org.apache.spark.sql.graftshim.Shim.freeLocalCheckpoint(prev)
+        org.apache.spark.sql.graftshim.Shim.freeLocalCheckpoint(prev)
       }
     }
     // drift guard: the probe's winners must equal the operator's

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.{ShuffleDependency, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /**
  * Task-retry determinism probe — the locally-executable slice of the
@@ -101,11 +101,10 @@ object ChaosRetry {
 
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder(8)
       // local[8,3]: 8 task threads, tasks may fail twice before the job
       // aborts — the injected attempt-0 throw is absorbed by a retry
       .master("local[8,3]")
-      .config("spark.sql.shuffle.partitions", "8")
       // The fetchfail families name THIS block manager in the injected
       // FetchFailedException, so the scheduler's executor-lost handling
       // deregisters the lone local block manager; any task result big
@@ -113,10 +112,6 @@ object ChaosRetry {
       // with TaskResultLost on every retry. Direct-ship results instead —
       // collects here are a few MB, far under the RPC frame cap.
       .config("spark.task.maxDirectResultSize", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     // The whole injection-census scheme (closure-captured static counter)
     // only observes task-side increments because local mode shares one

@@ -137,15 +137,7 @@ object ComponentsProbe {
     val ser = args.length > 2 && args(2) == "1"
     val parity = args.length > 3 && args(3) == "1"
     val prepart = args.length > 4 && args(4) == "1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Session.builder(graft.Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.SketchExprs.register(spark)
     val level = if (ser) Some(StorageLevel.MEMORY_AND_DISK_SER) else None

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for registered queries to files — the
   * optimization-round evidence artifact (plans/rNN/<query>_<tag>.txt).
   * Plans under the SAME session shape the bench measures (local[cpus],
@@ -22,15 +20,7 @@ object ExplainDump {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
     outDir.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Session.builder(graft.Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (sys.env.get("GRAFT_EXPLAIN_NO_BROADCAST").contains("1"))
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

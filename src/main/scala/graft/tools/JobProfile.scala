@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall-clock breakdown of one registered query: run it through
   * the bench's noop-sink protocol under the bench session shape and print
@@ -15,15 +14,7 @@ object JobProfile {
     val dir = args(0)
     val name = args(1)
     val passes = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Session.builder(graft.Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Similarity}
 
@@ -21,12 +20,7 @@ import graft.ext.{Dedup, Similarity}
 object LshProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: LshProbe <sfDir> [<sfDir2> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder(graft.Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     args.foreach { dir =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -186,13 +185,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Session.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

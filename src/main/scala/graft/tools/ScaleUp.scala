@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
  *    linear indicts the ENGINE, never the generator. Replica-unique
  *    tokens also give the corpus open (Heaps-law) vocabulary growth.
  *    Two earlier versions were artifact-bearing, both caught by
- *    measurement (tools/LshProbe, tools/SparseProbe):
+ *    measurement (tools/LshProbe; PLANS.md round-7 q_sparse_cosine triage):
  *    (a) every-3rd-position replacements drawn from the corpus's own
  *    closed 31-token vocabulary made replicas r and r+31 byte-identical
  *    twins (the rewrite pattern is periodic in r mod 31) and held the
@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
  *    (b) every-3rd-position replacements determined by position alone
  *    (a seeded vocab word indexed by (i + 7r) mod 31, suffixed) gave
  *    every document in a replica the same token at every third absolute
- *    position — SparseProbe measured 30k blocked cosine≥0.5 pairs per
+ *    position — the round-7 probe measured 30k blocked cosine≥0.5 pairs per
  *    5000-doc replica vs 1,135 in the identical base docs, because the
  *    position-dictated tokens both reshaped the shingle-df histogram
  *    (27× more df∈[2,3] blocking shingles) and boosted pairwise cosine
@@ -76,15 +76,10 @@ object ScaleUp {
     val src = args(0)
     val dest = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Session.builder(graft.Session.cpus(16))
       // events.ts is TIMESTAMP(NANOS): read as long nanos (the engine's
       // Tables adapter handles a BIGINT ts identically)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -203,15 +203,7 @@ object SkewCensus {
     } else None
     val tol = args.find(_.startsWith("tol="))
       .map(_.stripPrefix("tol=").toDouble).getOrElse(2.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Session.builder(graft.Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.SketchExprs.register(spark)
     sys.props("graft.frame.cache.disable") = "1"

@@ -24,15 +24,6 @@ object Shim {
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
-  /** (name, memoryUsedBytes, diskUsedBytes) per cached RDD, from the
-    * app-status store (`SparkContext.statusStore` is `private[spark]`) —
-    * the measured-bytes evidence for cache-pressure experiments
-    * (tools/LshCachePressure). Diagnostic-only, like the rest of this
-    * bridge. */
-  def cachedRddStats(spark: SparkSession): Seq[(String, Long, Long)] =
-    spark.sparkContext.statusStore.rddList(cachedOnly = true)
-      .map(r => (Option(r.name).getOrElse(s"rdd_${r.id}"), r.memoryUsed, r.diskUsed))
-
   /** Block until every queued listener event is delivered
     * (`LiveListenerBus.waitUntilEmpty` is `private[spark]`) — probes that
     * gate on listener-counted evidence (tools/ChaosRetry's stage-retry

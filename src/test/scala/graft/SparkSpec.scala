@@ -6,16 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one per forked test JVM). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the shipped session, same as Verify/Bench — regressions in the
+    // injected extension rules surface in every suite
+    val s = Session.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      // every suite runs under the shipped session extensions, same as
-      // Verify/Bench — regressions in the injected rules surface here
-      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

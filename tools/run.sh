@@ -1,5 +1,6 @@
 #!/bin/bash
-# sbt-free runner for graft mains (probes, ScaleUp, Bench, Verify):
+# sbt-free runner for graft mains (Bench, Verify, ScaleUp, the censuses
+# and the remaining tools under src/main/scala/graft/tools):
 #   tools/run.sh <mainClass> [args...]
 # Uses the classes sbt last compiled (run `sbt -batch compile` first) plus
 # the image's Spark jars, with the same JDK-17 --add-opens set as

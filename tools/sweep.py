@@ -180,6 +180,9 @@ exclude = set(os.environ.get("GRAFT_SWEEP_EXCLUDE", "q_embed_neardup").split(","
 pair_queries = [q for q in os.environ.get(
     "GRAFT_SWEEP_PAIRS", "q_embed_neardup_lsh").split(",") if q]
 
+# ratio at or past which a suite reading always earns an isolated probe
+ABS_FLOOR = 25.0
+
 
 def bench(sf_dir):
     # remove the artifact first: Bench swallows its own write failure, and
@@ -189,15 +192,10 @@ def bench(sf_dir):
     # frame cache OFF by default: scaling sweeps measure true per-query
     # compute, and a cache hit would hide a regression in the cached
     # stage (export GRAFT_NO_FRAME_CACHE=0 to sweep the cached regime)
-    # REF=none: Bench's outlier-retry pass compares against a sf0.1 local
-    # artifact — at a scaled SF dir that reference is wrong by the scale
-    # factor and would retry the whole cap for nothing; the sweep's own
-    # outlier machinery (isolated probes) is the defense here
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32",
                SPARK_GRAFT_BENCH_RUNS=runs,
                SPARK_GRAFT_BENCH_SKIP=",".join(sorted(exclude)),
                SPARK_GRAFT_BENCH_ROWS=",".join(pair_queries),
-               SPARK_GRAFT_BENCH_REF="none",
                GRAFT_NO_FRAME_CACHE=os.environ.get("GRAFT_NO_FRAME_CACHE", "1"))
     # load-gate the SUITE launch too, not just the probes: the r17 sweep's
     # sf10 leg started inside the sf0.1 leg's decaying 32-thread tail, and
@@ -248,7 +246,6 @@ def probe_isolated(q, sf_dir):
         os.remove(artifact)
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32",
                SPARK_GRAFT_BENCH_RUNS=runs, SPARK_GRAFT_BENCH_ONLY=q,
-               SPARK_GRAFT_BENCH_REF="none",
                GRAFT_NO_FRAME_CACHE=os.environ.get("GRAFT_NO_FRAME_CACHE", "1"))
     load = wait_quiet()
     print(f"[sweep] isolated probe: {q} @ {sf_dir} start_load={load:.2f}",
@@ -312,14 +309,13 @@ if REPROBE is not None:
 
 if PROBE_BAND is not None:
     ref_file, ref_rows = parse_sweep_rows(ref_path)
-    floor = float(os.environ.get("GRAFT_SWEEP_ABS_FLOOR", "25"))
     targets = sorted(
         ((q, v) for q, v in ref_rows.items()
          if v[3] >= PROBE_BAND and v[2] is None and q not in exclude),
         key=lambda x: -x[1][3])
     print(f"[sweep] probe-band {PROBE_BAND}x: {len(targets)} never-probed "
           f"queries at ratio >= {PROBE_BAND}x in {os.path.basename(ref_file)} "
-          f"(floor was {floor}x)", flush=True)
+          f"(floor was {ABS_FLOOR}x)", flush=True)
     print(f"\n{'query':34} {'base_s':>8} {'suite_s':>9} {'suite_r':>8} "
           f"{'iso_s':>8} {'iso_r':>8} verdict")
     bad = 0
@@ -363,7 +359,6 @@ for q, tb in b["queries"].items():
 #    floor — r11/r12's q_multimodal_resize sat at 23.9x (just under the
 #    floor) for two sweeps running without ever earning its one isolated
 #    reading; rank-based probing closes that gap class permanently.
-ABS_FLOOR = float(os.environ.get("GRAFT_SWEEP_ABS_FLOOR", "25"))
 top3 = {row[1] for row in sorted(
     (r for r in rows if r[2] and r[2] > 0 and r[3] and r[3] > 0),
     key=lambda x: -x[0])[:3]}
