@@ -35,13 +35,17 @@ object StreamJob {
    * The batch is persisted for the duration of the fan-out: a foreachBatch
    * DataFrame is a plan over the trigger's source slice, not materialized
    * rows, so each of the 8 analyses that consume `batch` directly would
-   * otherwise re-read and re-parse the source per action. Measured via
-   * tools/StreamBench at sf10 (200k-event batches): 48.9k → 66.4k
-   * events/s end-to-end. MEMORY_AND_DISK spills rather than evicting if
-   * a trigger outgrows executor storage.
+   * otherwise re-read and re-parse the source per action. Measured at
+   * sf10 (200k-event batches): 48.9k → 66.4k events/s end-to-end
+   * (PLANS.md round-10 §7). MEMORY_AND_DISK spills rather than evicting
+   * if a trigger outgrows executor storage.
+   *
+   * The analyses run one after another in [[tables]] order, as the
+   * reference's run_all_analyses does. A sink that throws stops the
+   * fan-out there: later tables are not computed, the exception
+   * propagates unchanged, and both persisted frames are released.
    */
-  def runAllAnalyses(batch: DataFrame, batchId: Long, steps: Seq[String],
-                     parallelism: Int = 1)(
+  def runAllAnalyses(batch: DataFrame, batchId: Long, steps: Seq[String])(
       sink: (DataFrame, String) => Unit): Unit = {
     val b = batch.persist()
     val sessionized = Sessionize(b).persist()
@@ -56,43 +60,8 @@ object StreamJob {
       "top_items" -> (() => Items.topItemsPerMinute(b)),
       "item_interactions" -> (() => Items.itemInteractions(b)),
       "most_viewed_items" -> (() => Items.mostViewedItems(b)))
-    try {
-      if (parallelism <= 1) work.foreach { case (t, f) => sink(f(), t) }
-      else {
-        // Concurrent fan-out: each analysis is a small job whose scheduling
-        // latency is paid serially in the sequential mode while most cores
-        // idle. The cached frames are materialized FIRST (cheap counts) so
-        // concurrent consumers read the cache instead of racing to compute
-        // it. Opt-in because sink callbacks run from pool threads and their
-        // completion order is nondeterministic — the caller's sink must be
-        // thread-safe (per-table JDBC appends are; a shared mutable collector
-        // needs synchronization).
-        b.count(); sessionized.count()
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          // settle ALL futures before surfacing a failure: a fail-fast
-          // Future.sequence would return (and the finally would unpersist)
-          // while sibling sinks are still mid-write — the first failure is
-          // rethrown only after every sink call has finished
-          val settled = Await.result(
-            Future.sequence(work.map { case (t, f) =>
-              Future(sink(f(), t)).transform(scala.util.Success(_))
-            }), Duration.Inf)
-          // surface the first failure with the rest attached as suppressed:
-          // when a shared cause (e.g. the JDBC target down) fails several
-          // sinks, the sibling exceptions often carry the diagnostic detail
-          val failures = settled.collect { case scala.util.Failure(e) => e }
-          failures.headOption.foreach { first =>
-            failures.drop(1).foreach(first.addSuppressed)
-            throw first
-          }
-        } finally { pool.shutdown() }
-      }
-    } finally { sessionized.unpersist(); b.unpersist(); () }
+    try work.foreach { case (t, f) => sink(f(), t) }
+    finally { sessionized.unpersist(); b.unpersist(); () }
   }
 
   /**
@@ -109,9 +78,7 @@ object StreamJob {
       .option("subscribe", topic)
       .option("startingOffsets", "earliest")
       .load()
-    CleanStage.parseKafkaEnvelope(raw)
-      .withColumn("event_time",
-        timestamp_millis(col("unix_timestamp").cast("long")))
+    parseAndStamp(raw)
   }
 
   /**
@@ -125,9 +92,9 @@ object StreamJob {
    *
    * `maxFilesPerTrigger` paces replay: with the dump written as N
    * time-ranged slices, 1 file/trigger re-plays the archive as N
-   * micro-batches in original event order — the knob
-   * [[graft.tools.StreamBench]] uses to measure sustained pipeline
-   * throughput at a controlled batch size.
+   * micro-batches in original event order — the knob perfbench's
+   * `cap` and `sessions` drains use to feed the DAG a fixed backlog at a
+   * controlled batch size.
    */
   def readEnvelopeFiles(spark: SparkSession, dir: String,
                         maxFilesPerTrigger: Option[Int] = None): DataFrame = {
@@ -135,31 +102,21 @@ object StreamJob {
     val kv = StructType(Seq(StructField("key", StringType), StructField("value", StringType)))
     val reader = spark.readStream.schema(kv)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val raw = reader.json(dir)
+    parseAndStamp(reader.json(dir))
+  }
+
+  /** The envelope parse plus the event-time stamp both readers share. */
+  private def parseAndStamp(raw: DataFrame): DataFrame =
     CleanStage.parseKafkaEnvelope(raw)
       .withColumn("event_time",
         timestamp_millis(col("unix_timestamp").cast("long")))
-  }
-
-  /** Measured throughput/latency operating point for stateful replay
-    * (STREAMBENCH_r14 knee table, 10M events, 50 slices): per-trigger
-    * state commit is FIXED ~6–8 s summed over the state partitions
-    * regardless of batch size, so events/s scales with files-per-trigger
-    * — 224k at 1 file, 746k at 5, 1.13M at 10, 1.90M at the single-batch
-    * asymptote. 10 files/trigger is the knee of the latency trade: 60%
-    * of the batch-mode ceiling at p50 batch latency 1.5 s / p95 2.0 s;
-    * past it each throughput increment costs proportionally more latency
-    * than it returns. Size production micro-batches so each trigger
-    * carries ~60k events per state partition before tuning further. */
-  val RecommendedFilesPerTrigger: Int = 10
 
   /** Start the foreachBatch pipeline over any streaming DataFrame. */
-  def start(events: DataFrame, checkpointDir: String, steps: Seq[String],
-            parallelism: Int = 1)(
+  def start(events: DataFrame, checkpointDir: String, steps: Seq[String])(
       sink: (DataFrame, String) => Unit): StreamingQuery =
     events.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        runAllAnalyses(batch, batchId, steps, parallelism)(sink)
+        runAllAnalyses(batch, batchId, steps)(sink)
       }
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)

@@ -54,58 +54,34 @@ class StreamingSpec extends SparkSpec {
     assert(batchIds === mutable.Buffer(0L, 1L))
   }
 
-  test("parallel fan-out produces the same rows per table as sequential") {
-    // runAllAnalyses(parallelism = n) overlaps the 10 per-batch jobs on a
-    // thread pool; results must be row-identical to the sequential mode
-    // (the sink just has to tolerate concurrent calls — here a concurrent
-    // map keyed by table, which is also the production JDBC shape).
-    // plain tuples, not the Ev inner class: the deserializer resolves
-    // lazily on the fan-out's pool threads, where an inner-class encoder
-    // has no outer scope
+  test("sequential fan-out: a failing sink stops at its table and releases the persisted frames") {
+    // runAllAnalyses calls the sink once per table in StreamJob.tables
+    // order. A sink that throws mid-way must surface its own exception,
+    // leave every later table uncomputed, and (through the finally) leave
+    // no persisted batch or sessionized frame behind.
     val batch = Seq(
       ("u1", ts(100), "view", "i1"), ("u1", ts(200), "click", "i2"),
-      ("u1", ts(200 + 1801), "view", "i3"), // second session for u1
-      ("u2", ts(150), "view", "i1"), ("u2", ts(240), "purchase", "i3"),
-      ("u3", ts(120), "view", "i2"))
+      ("u2", ts(150), "view", "i1"), ("u2", ts(240), "purchase", "i3"))
       .toDF("visitorid", "event_time", "event", "itemid")
-    def collectAll(parallelism: Int): Map[String, Seq[String]] = {
-      val results = new java.util.concurrent.ConcurrentHashMap[String, Array[Row]]()
-      StreamJob.runAllAnalyses(batch, 7L, Schemas.testdataFunnelSteps, parallelism) {
-        // analysis_time is a wall-clock provenance stamp — drop it, the
-        // two runs execute at different instants by construction
-        (df, table) =>
-          results.put(table,
-            (if (df.columns.contains("analysis_time")) df.drop("analysis_time") else df)
-              .collect())
-          ()
-      }
-      import scala.jdk.CollectionConverters._
-      results.asScala.toMap.map { case (t, rows) =>
-        t -> rows.toSeq.map(_.toSeq.mkString("|")).sorted
-      }
-    }
-    val sequential = collectAll(1)
-    val parallel = collectAll(10)
-    assert(sequential.keySet === StreamJob.tables.toSet)
-    assert(parallel === sequential)
-  }
-
-  test("parallel fan-out: a failing sink surfaces only after every sibling sink finished") {
-    // the all-settle contract: runAllAnalyses must not return (and
-    // unpersist its frames) while sibling sink futures are still writing —
-    // the first failure propagates only after all 10 calls completed
-    val batch = Seq(("u1", ts(100), "view", "i1"))
-      .toDF("visitorid", "event_time", "event", "itemid")
-    val finished = new java.util.concurrent.atomic.AtomicInteger(0)
+    val failAt = StreamJob.tables.indexOf("event_type_distribution")
+    val boom = new RuntimeException("sink down")
+    val called = mutable.Buffer[String]()
+    var cachedDuringFanOut = Set.empty[Int]
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val thrown = intercept[RuntimeException] {
-      StreamJob.runAllAnalyses(batch, 1L, Schemas.testdataFunnelSteps, parallelism = 10) {
-        (df, table) =>
-          if (table == "sessions") throw new RuntimeException("sink down")
-          df.collect(); finished.incrementAndGet(); ()
+      StreamJob.runAllAnalyses(batch, 1L, Schemas.testdataFunnelSteps) { (df, table) =>
+        called += table
+        if (table == StreamJob.tables(failAt)) throw boom
+        df.collect()
+        cachedDuringFanOut ++= spark.sparkContext.getPersistentRDDs.keySet -- before
       }
     }
-    assert(thrown.getMessage === "sink down")
-    assert(finished.get() === 9, s"only ${finished.get()} sibling sinks finished")
+    assert(thrown eq boom)
+    assert(called.toSeq === StreamJob.tables.take(failAt + 1))
+    // the check below has teeth only if the fan-out really cached something
+    assert(cachedDuringFanOut.nonEmpty)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
   }
 
   test("session_window (batch mode) merges what per-batch processing split") {
@@ -857,8 +833,9 @@ class StreamingSpec extends SparkSpec {
   // relaunch must replay the dead batch against the rolled-back state
   // version, re-emit the identical rows, and the recovered session table
   // must equal the batch twin — no session lost, none doubled. The
-  // StreamBench `recovery` mode carries the wall-time leg of the same
-  // certification at sf0.1; this spec carries the batch-oracle leg.
+  // wall-time leg of the same certification (sf0.1 and sf10, both
+  // providers) is recorded in RECOVERY_r15*.json and PLANS.md round-15
+  // §1; this spec carries the batch-oracle leg.
   Seq("hdfs", "rocksdb").foreach { provider =>
     test(s"crash mid-batch ($provider): checkpoint recovery loses no session, doubles none") {
       implicit val sqlCtx = spark.sqlContext
