@@ -33,15 +33,6 @@ object MinuteStats {
       .agg(countDistinct(col("visitorid")).as("active_users"))
 
   /**
-   * A6 at 100 TB: exact global distinct is a shuffle bomb; HLL keeps the
-   * aggregation partial/mergeable with fixed-size state (SURVEY.md §7.4).
-   */
-  def activeUsersApprox(events: DataFrame, rsd: Double = 0.01): DataFrame =
-    withMinute(events)
-      .groupBy(col("minute"))
-      .agg(approx_count_distinct(col("visitorid"), rsd).as("active_users"))
-
-  /**
    * A5, streaming-native (the upgrade the reference lacks, SURVEY §2.7):
    * event-time tumbling window + watermark, so late data is bounded and
    * state is evicted — instead of per-batch minute rows that consumers

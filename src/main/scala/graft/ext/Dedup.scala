@@ -257,10 +257,9 @@ object Dedup {
   /** Instrumentation seam for [[componentsFromEdges]]: every eager
     * checkpoint barrier routes through [[CcHooks.ckpt]] with a stable name
     * ("edges", "touched", "symall", "labels0", "round_N"). The default is
-    * the plain operator move; tools/ComponentsProbe overrides it to time
-    * each barrier, switch the storage level, or re-layout the frame first
-    * — so the probe measures the REAL operator body instead of restating
-    * it (the r13–r16 drift hazard this seam retires). */
+    * the plain operator move; ExtSpec overrides it to count the round
+    * checkpoints, so the pin observes the REAL operator body instead of
+    * restating it. */
   private[graft] trait CcHooks {
     def ckpt(name: String, df: DataFrame): DataFrame = df.localCheckpoint(true)
   }

@@ -132,10 +132,7 @@ object Similarity {
                       dim: Int = 64,
                       numBands: Int = NumBands,
                       planesPerBand: Int = PlanesPerBand,
-                      maxBucketSize: Option[Int] = None,
-                      bandsStorage: org.apache.spark.storage.StorageLevel =
-                        org.apache.spark.storage.StorageLevel.DISK_ONLY,
-                      onBands: DataFrame => Unit = _ => ()): DataFrame = {
+                      maxBucketSize: Option[Int] = None): DataFrame = {
     // embeddings ride along INTO the bucket join so the cosine is computed
     // as the candidate streams out of it, and only thresholded survivors
     // ever reach a shuffle. The previous shape (pair ids → distinct →
@@ -159,18 +156,14 @@ object Similarity {
     // of shuffle-spill disk before completing (1.8× slower already at
     // 10×); MEMORY_AND_DISK vs DISK_ONLY on the fat frame is a wash
     // (9.25 vs 9.23 s, interleaved warm rounds). DISK_ONLY is therefore
-    // the default — same wall-clock, but the 234 MB-per-million-vectors
+    // the level — same wall-clock, but the 234 MB-per-million-vectors
     // columnar cache stays OUT of the unified-memory storage pool, which
     // on a real executor is exactly the headroom the bucket join's hash
-    // maps want. Callers can still pass MEMORY_AND_DISK when the frame is
-    // re-read across many actions and local disk is slow.
+    // maps want.
     val bands = Dedup.capBuckets(
       sig.select(col("vec_id"), col("embedding"), col("nrm"), posexplode(col("bands")))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key"),
-      maxBucketSize).persistTracked(bandsStorage)
-    // instrumentation seam: tools/ComponentsProbe forces+times the persist
-    // here so the signature pass and the bucket join decompose; no-op default
-    onBands(bands)
+      maxBucketSize).persistTracked(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val b1 = bands.select(col("band"), col("band_key"),
       col("vec_id").as("id1"), col("embedding").as("emb1"), col("nrm").as("nrm1"))
     val b2 = bands.select(col("band"), col("band_key"),

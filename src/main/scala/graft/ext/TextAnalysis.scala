@@ -27,9 +27,6 @@ object TextAnalysis {
   def hash32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  /** SQL fragment of [[hash32]] usable inside higher-order lambdas. */
-  val hash32Sql: String = "CAST(conv(substr(md5(%s), 1, 8), 16, 10) AS BIGINT)"
-
   /** Portable 60-bit hash (first 15 md5 hex digits). Use where the hash is
     * a HARD membership key rather than a sketch ingredient: 32 bits
     * saturate by birthday at corpus scale (at 10^12-10^13 distinct
@@ -62,18 +59,6 @@ object TextAnalysis {
               | ELSE array_distinct(transform(sequence(0, size(toks)-$n),
               |        i -> concat_ws(' ', $parts))) END""".stripMargin))
   }
-
-  /** Shingles hashed ONCE into `hs` (one md5 per shingle). Downstream
-    * sketches (minhash perms, simhash bits) loop over these integers —
-    * never recompute the md5 inside a per-perm/per-bit lambda. */
-  def withHashedShingles(docs: DataFrame, n: Int = 3): DataFrame =
-    withShingles(docs, n).withColumn("hs",
-      expr(s"transform(shingles, s -> ${hash32Sql.format("s")})"))
-
-  /** Tokens hashed once into `ths` (simhash input — keeps multiplicity). */
-  def withHashedTokens(docs: DataFrame): DataFrame =
-    withTokens(docs).withColumn("ths",
-      expr(s"transform(toks, t -> ${hash32Sql.format("t")})"))
 
   /** Basic stats: token counts (whitespace + word-regex), char counts,
     * average token length. */
@@ -398,8 +383,8 @@ object TextAnalysis {
           // generations are freed one count-pass later (top of the loop):
           // the per-round free itself is the r10 fix — without it `rounds`
           // corpus-sized generations pile up in the block manager for the
-          // whole train (BpeTrainProbe measured 47–111 s late-round stalls
-          // on the 100× corpus from exactly that storage/GC pressure).
+          // whole train (PLANS.md round-10 §3 measured 47–111 s late-round
+          // stalls on the 100× corpus from exactly that storage/GC pressure).
           // Safe ONLY because nothing reads a superseded generation again
           // (see Shim.freeLocalCheckpoint).
           r += 1

@@ -34,7 +34,7 @@ object JobProfile {
       fn(spark, dir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      Thread.sleep(200) // let listener events drain
+      org.apache.spark.sql.graftshim.Shim.drainListenerBus(spark)
       println(f"== pass $p: $name wall $wall%.2f s ==")
       import scala.jdk.CollectionConverters._
       rows.asScala.toSeq.sortBy(_._1).foreach { case (id, ms, desc) =>

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
  *    linear indicts the ENGINE, never the generator. Replica-unique
  *    tokens also give the corpus open (Heaps-law) vocabulary growth.
  *    Two earlier versions were artifact-bearing, both caught by
- *    measurement (tools/LshProbe; PLANS.md round-7 q_sparse_cosine triage):
+ *    measurement (PLANS.md round-7 q_sparse_cosine triage):
  *    (a) every-3rd-position replacements drawn from the corpus's own
  *    closed 31-token vocabulary made replicas r and r+31 byte-identical
  *    twins (the rewrite pattern is periodic in r mod 31) and held the

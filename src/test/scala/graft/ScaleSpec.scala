@@ -404,8 +404,8 @@ class ScaleSpec extends SparkSpec {
   test("planted skew: LSH bucket cap bounds the candidate count, costs zero organic pairs") {
     import org.apache.spark.sql.functions.{col, lit, max => smax}
     import graft.ext.Dedup
-    // the SkewBench accounting (tools/SkewBench, PLANS.md round-8 table)
-    // pinned at test scale: a boilerplate cluster — the same footer on
+    // the planted-skew accounting (PLANS.md round-8 table) pinned at
+    // test scale: a boilerplate cluster — the same footer on
     // every page, one mega bucket in EVERY minhash band — planted far
     // over the cap on top of the real corpus. The cap's whole recall
     // loss must land on that degenerate cluster, and the candidate
