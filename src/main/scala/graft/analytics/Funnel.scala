@@ -115,7 +115,7 @@ object Funnel {
     // references stage k−1 AND s1, and the final assembly references all
     // of them again, so without the pins each reference re-ran the whole
     // recursive lineage — 1+3+5 = NINE filtered event scans for 3 steps
-    // (the r12 ScanCensus find; ReuseExchange does not unify them) where
+    // (the r12 scan-census find; ReuseExchange does not unify them) where
     // the documented shape is one per step. The pins make the plan match
     // the scaladoc: |steps| filtered scans, each stage's agg computed
     // once. The LAST stage has a single consumer and stays unpinned.

@@ -40,6 +40,8 @@ import org.apache.spark.sql.execution.FileSourceScanExec
  * only. Stages with < 8 tasks or < 1 MB total shuffle read are ignored
  * for skew (a 2-task stage's max/mean is noise, and balance over 0.1 MB
  * is free either way); tasks = 0 / skews = 1.0 when none qualifies.
+ * Below sf0.1 no registry stage clears that floor: the summary line then
+ * says so, and a --diff CLEAN line adds that skew was not compared.
  * max/mean rather than max/median keeps the statistic bounded in
  * [1, n_tasks] and well-defined when most tasks read zero bytes (one
  * hot key), exactly the case the census exists to catch.
@@ -76,6 +78,11 @@ object Census {
                  skewB: Double, skewT: Double)
 
   private val Mb = 1024.0 * 1024.0
+
+  /** The skew floor: a shuffle-read stage counts for skew only with at
+    * least this many tasks and this many bytes read. */
+  private val SkewMinTasks = 8
+  private val SkewMinBytes = 1L << 20
 
   /** Parse a census artifact's per-query table lines into query -> Row;
     * amp '-' parses as -1. Header, FAILED, flag, summary and wrapper
@@ -266,7 +273,7 @@ object Census {
             // absolute shuffle bytes are still the record
             val amp = if (scan > 0) m.writeBytes.toDouble / scan else -1.0
             val (tasks, stageMb, sb, st) =
-              worstStage(m.stages, minTasks = 8, minBytes = 1L << 20) match {
+              worstStage(m.stages, SkewMinTasks, SkewMinBytes) match {
                 case Some((s, sb, st, tot)) => (s.tasks, tot / Mb, sb, st)
                 case None => (0, 0.0, 1.0, 1.0)
               }
@@ -325,6 +332,11 @@ object Census {
         f"${measured.size} with a qualifying shuffle stage, worst skew_b " +
         f"${measured.map(_.skewB).foldLeft(1.0)(math.max)}%.2f, " +
         s"${flagged.size} flagged above ${flag}x" +
+        (if (measured.isEmpty)
+           s"; no shuffle stage clears the skew floor ($SkewMinTasks tasks, " +
+             s"${SkewMinBytes >> 20} MB read), so the skew columns say nothing: " +
+             "run at sf0.1 or larger to measure skew"
+         else "") +
         (if (failedNames.nonEmpty)
            s"; ${failedNames.size} FAILED: ${failedNames.mkString(",")}"
          else ""))
@@ -336,9 +348,13 @@ object Census {
         require(prior.nonEmpty, s"[census-diff] $path yielded zero rows — " +
           "wrong file or format drift; a vacuous diff must not read as clean")
         val moved = diffRows(rows, prior, tol, flag, failedNames.toSet)
+        // diffRows compares skew_b only where both sides had a qualifying stage
+        val skewCompared =
+          rows.exists(c => c.tasks > 0 && prior.get(c.query).exists(_.tasks > 0))
         if (moved.isEmpty)
           println(s"[census-diff] CLEAN vs $path (tol ${tol}x, " +
-            s"${prior.size} prior rows): no query moved beyond tolerance")
+            s"${prior.size} prior rows): no query moved beyond tolerance" +
+            (if (skewCompared) "" else "; skew axis not compared"))
         else {
           println(s"[census-diff] vs $path (tol ${tol}x): ${moved.size} moved")
           moved.foreach { case (q, kind, p, c) =>

@@ -1,35 +1,186 @@
 package graft.tools
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Window}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
 /**
- * Registry-wide plan-shape inventory: for every `SparkEntry.queries` entry,
- * plan it against the given sf dir and print one JSON line naming
- *   - physical CartesianProductExec nodes (should never exist),
- *   - physical BroadcastNestedLoopJoinExec nodes (legitimate only for the
- *     documented broadcast-1-row scalar/codebook cross joins),
- *   - interpreted (CodegenFallback) expressions anywhere in the physical
- *     plan (engine expressions are all real-codegen since r9; a builtin
- *     or future expression regressing to fallback de-pipelines its
- *     WholeStageCodegen span),
- *   - fat columns (documents.text, embeddings.embedding) read at a parquet
- *     scan, and — the 100 TB hazard — carried THROUGH a ShuffleExchange.
- *     The fat_shuffle census is PINNED in ScaleSpec since r10: it plans
- *     with auto-broadcast disabled (so small-sf size estimates can't hide
- *     the shuffle a big sf would take) and traces attribute LINEAGE via
- *     [[fatShuffled]] (so the LSH emb1/emb2 renames can't evade it).
- * Run with -Dgraft.frame.cache.disable=1 to see the real computation
- * pipelines instead of warm FrameCache memo scans.
- * The committed ScaleSpec audit pins the discovered population; this tool
- * exists to (re-)discover it when the spec's allowlist fails.
- * Usage: runMain graft.tools.PlanAudit <sfDir>
+ * Registry-wide static plan audit: every `SparkEntry.queries` entry is
+ * planned (never executed) once per planning regime and reduced to one
+ * [[PlanAudit.PlanRow]] of derived values. ScaleSpec's registry audits pin
+ * those rows; this main re-discovers the population when a pin fails, and
+ * dumps the formatted plans that optimization rounds cite as evidence.
+ *
+ * Regime A is the session as configured (the bench shape: AQE on, default
+ * broadcast threshold). Regime B is [[PlanAudit.bigCorpus]]: the shape a
+ * 100 TB corpus plans to, where joins small-sf size estimates would
+ * broadcast shuffle instead. Both run with FrameCache off (a warm memo
+ * replaces a whole family's lineage with a parquet scan of the memo) and
+ * clear the CacheManager before every build: operators persistTracked()
+ * engine-internal frames eagerly at construction, so a frame registered
+ * while planning an alphabetically earlier query would otherwise be
+ * substituted into later plans, making the counts iteration-order
+ * dependent (r13).
+ *
+ * Usage: runMain graft.tools.PlanAudit <sfDir> [planDir]
+ * Output: one JSON line per query with every column, a FAILED TO PLAN line
+ * per query that throws, and the exchange population summary. With
+ * `planDir`, each query's formatted explain is written there for both
+ * regimes: `<q>.bench.txt` and `<q>.bigcorpus.txt`.
  */
 object PlanAudit {
+
+  /** One registered query's plan shape. Regime A, from one build:
+    *  - `unboundedWindow`: the optimized plan holds a global (no PARTITION
+    *    BY) window whose input carries no LIMIT — Exchange SinglePartition
+    *    + WindowExec serializes the whole frame through one reducer;
+    *  - `cartesian`, `bnlj`: CartesianProduct / BroadcastNestedLoopJoin
+    *    nodes over [[allNodes]] of the sparkPlan (physical, before AQE
+    *    wrapping, so fully traversable);
+    *  - `fallback`: class names of interpreted (CodegenFallback)
+    *    expressions — each de-pipelines its WholeStageCodegen span;
+    *  - `fat`: fat columns (documents.text, embeddings.embedding) read at
+    *    a parquet scan;
+    *  - `tables`, `directScans`, `cachedScans`: distinct tables read,
+    *    parquet scans outside any persist (each re-runs its lineage per
+    *    consumer) and scans reachable only through one. A query whose
+    *    direct scans exceed its tables evaluates some lineage more than
+    *    once — the shape that cost q_ab_test 2x and windowFunnel nine
+    *    event scans for three steps (r12): ReuseExchange does not unify
+    *    same-lineage branches when anything differs above the shared
+    *    subtree.
+    * Regime B ([[bigCorpus]]), from a second build's executedPlan:
+    *  - `fatShuffle`, `fatBroadcast`: [[fatShuffled]], [[fatBroadcast]];
+    *  - `exchanges`, `reused`, `dupUnreused`: live exchanges, reuse stubs,
+    *    and live exchanges canonically equal to another live one. After
+    *    ReuseExchangeAndSubquery every exchange it could unify is a stub,
+    *    so a surviving duplicate is a real reuse miss — a full redundant
+    *    shuffle stage per consumer at scale. */
+  final case class PlanRow(
+      name: String, unboundedWindow: Boolean, cartesian: Int, bnlj: Int,
+      fallback: Seq[String], fat: Seq[String],
+      tables: Int, directScans: Int, cachedScans: Int,
+      fatShuffle: Seq[String], fatBroadcast: Seq[String],
+      exchanges: Int, reused: Int, dupUnreused: Int)
+
+  /** Runs `body` in the shape a 100 TB corpus plans to: auto-broadcast
+    * off (small-sf size estimates broadcast the joins a big corpus
+    * shuffles, hiding their exchanges; explicit broadcast() hints survive
+    * the -1 threshold) and AQE off (so `executedPlan` is static, fully
+    * traversable, holds the exchanges EnsureRequirements adds — sparkPlan
+    * has none — and has been through ReuseExchangeAndSubquery). The cache
+    * is cleared after the switch, so no frame cached under the other conf
+    * is substituted, and again after the saved values are restored. */
+  def bigCorpus[T](spark: SparkSession)(body: => T): T = {
+    val settings = Seq(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val saved = settings.map { case (k, _) => k -> spark.conf.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    spark.catalog.clearCache()
+    try body
+    finally {
+      saved.foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.catalog.clearCache()
+    }
+  }
+
+  /** Every registered query, built once per regime. A query that throws
+    * while planning is an (name, error) entry — a regression to
+    * fails-to-plan must be visible to the audit, not silently absent
+    * (r12). With `planDir`, also writes both regimes' formatted explains. */
+  def report(spark: SparkSession, sfDir: String,
+             planDir: Option[java.io.File] = None)
+      : (Seq[PlanRow], Seq[(String, String)]) = {
+    val rows = Seq.newBuilder[PlanRow]
+    val fails = Seq.newBuilder[(String, String)]
+    def dump(df: DataFrame, file: String): Unit =
+      planDir.foreach { dir =>
+        val txt = df.queryExecution.explainString(FormattedMode)
+        java.nio.file.Files.write(new java.io.File(dir, file).toPath, txt.getBytes("UTF-8"))
+      }
+    def hasLimit(p: LogicalPlan): Boolean =
+      p.collectFirst { case _: GlobalLimit => (); case _: LocalLimit => () }.nonEmpty
+    val frameCache = sys.props.get("graft.frame.cache.disable")
+    sys.props("graft.frame.cache.disable") = "1"
+    try graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      scala.util.Try {
+        spark.catalog.clearCache()
+        val df = fn(spark, sfDir)
+        dump(df, s"$name.bench.txt")
+        val windows = df.queryExecution.optimizedPlan
+          .collect { case w: Window if w.partitionSpec.isEmpty => w }
+        val plan = df.queryExecution.sparkPlan
+        val nodes = allNodes(plan)
+        val fallback = nodes.flatMap(_.expressions.flatMap(_.collect {
+          case e: CodegenFallback => e.getClass.getName
+        })).distinct.sorted
+        val scans = nodes.collect { case s: FileSourceScanExec => s }
+        val direct = directNodes(plan).count(_.isInstanceOf[FileSourceScanExec])
+        val tables = scans.map(_.relation.location.rootPaths.headOption
+          .map(_.getName).getOrElse("?")).distinct
+        bigCorpus(spark) {
+          val big = fn(spark, sfDir)
+          dump(big, s"$name.bigcorpus.txt")
+          val exec = big.queryExecution.executedPlan
+          val bigNodes = directNodes(exec)
+          val live = bigNodes.collect { case e: Exchange => e }
+          PlanRow(name,
+            unboundedWindow = windows.nonEmpty && !windows.forall(w => hasLimit(w.child)),
+            cartesian = nodes.count(_.isInstanceOf[CartesianProductExec]),
+            bnlj = nodes.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+            fallback = fallback,
+            fat = scans.flatMap(_.output.map(_.name)
+              .filter(c => c == "text" || c == "embedding")).distinct.sorted,
+            tables = tables.size, directScans = direct,
+            cachedScans = scans.size - direct,
+            fatShuffle = fatShuffled(exec), fatBroadcast = fatBroadcast(exec),
+            exchanges = live.size,
+            reused = bigNodes.count(_.isInstanceOf[ReusedExchangeExec]),
+            dupUnreused = live.groupBy(_.canonicalized).values.map(_.size - 1).sum)
+        }
+      } match {
+        case scala.util.Success(r) => rows += r
+        case scala.util.Failure(e) =>
+          fails += ((name, s"${e.getClass.getSimpleName}: ${e.getMessage}"))
+      }
+    } finally {
+      frameCache.fold(sys.props.remove("graft.frame.cache.disable"))(
+        sys.props.put("graft.frame.cache.disable", _))
+      spark.catalog.clearCache()
+    }
+    (rows.result(), fails.result())
+  }
+
+  /** Every node that runs once per consumer: children plus subquery plans,
+    * entering nested adaptive roots, stopping at the curtains whose work
+    * runs once elsewhere — InMemoryTableScan (the persisted subtree
+    * materializes once), ReusedExchange (the original is counted where it
+    * lives) and ReusedSubquery (it shares its SubqueryExec with the
+    * original site; walking it again counted every live exchange of the
+    * shared subtree as a false duplicate, r15). [[allNodes]] instead walks
+    * through persists and skips subqueries. */
+  private def directNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val out = Seq.newBuilder[SparkPlan]
+    def walk(n: SparkPlan): Unit = {
+      out += n
+      n match {
+        case _: InMemoryTableScanExec | _: ReusedExchangeExec | _: ReusedSubqueryExec =>
+        case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
+        case other =>
+          other.children.foreach(walk)
+          other.subqueries.foreach(walk)
+      }
+    }
+    walk(p)
+    out.result()
+  }
 
   /** Every node of `p` INCLUDING the plans behind the two leaf-node
     * curtains `collect` stops at: InMemoryTableScanExec (persist()
@@ -42,7 +193,7 @@ object PlanAudit {
     val here = p.collect { case n => n }
     here ++ here.flatMap {
       case imts: InMemoryTableScanExec => allNodes(imts.relation.cachedPlan)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      case a: AdaptiveSparkPlanExec =>
         allNodes(a.inputPlan)
       case _ => Nil
     }
@@ -157,7 +308,7 @@ object PlanAudit {
           imts.relation.cachedPlan.output.zip(imts.relation.output).foreach {
             case (src, out) => taint.get(src.exprId).foreach(taint(out.exprId) = _)
           }
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        case a: AdaptiveSparkPlanExec =>
           walk(a.inputPlan)
         case r: ReusedExchangeExec =>
           walk(r.child)
@@ -184,56 +335,29 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = graft.Session.builder(4).getOrCreate()
+    require(args.nonEmpty, "usage: PlanAudit <sfDir> [planDir]")
+    val planDir = args.lift(1).map(new java.io.File(_))
+    planDir.foreach(_.mkdirs())
+    val spark = graft.Session.builder(graft.Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        // sparkPlan = physical plan before AQE wrapping: fully traversable
-        val nodes = allNodes(fn(spark, dir).queryExecution.sparkPlan)
-        val cartesian = nodes.collect { case c: CartesianProductExec => c }
-        val bnlj = nodes.collect { case j: BroadcastNestedLoopJoinExec => j }
-        val fallback = nodes.flatMap(node => node.expressions.flatMap(_.collect {
-          case e: CodegenFallback =>
-            val n = e.getClass.getSimpleName
-            if (n.nonEmpty) n else e.getClass.getName
-        })).distinct.sorted
-        val fat = nodes.collect {
-          case s: FileSourceScanExec =>
-            s.output.map(_.name).filter(c => c == "text" || c == "embedding")
-        }.flatten.distinct.sorted
-        // fat-THROUGH-shuffle census: re-plan for the shape a 100 TB
-        // corpus takes — auto-broadcast OFF (small-sf size estimates
-        // broadcast the bucket joins, hiding their exchanges), AQE OFF
-        // and executedPlan (sparkPlan predates EnsureRequirements, so it
-        // contains NO exchanges at all — the r9 name census was blind
-        // for that reason, not just because of renames), lineage-traced
-        // via [[fatShuffled]]. This census IS pinned in ScaleSpec now.
-        val (fatShuffle, fatBcast) = {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          spark.catalog.clearCache() // drop frames cached under default conf
-          try {
-            val plan = fn(spark, dir).queryExecution.executedPlan
-            (fatShuffled(plan), fatBroadcast(plan))
-          } finally {
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-          }
-        }
-        if (cartesian.nonEmpty || bnlj.nonEmpty || fallback.nonEmpty ||
-            fat.nonEmpty || fatShuffle.nonEmpty || fatBcast.nonEmpty)
-          println(s"""{"q":"$name","cartesian":${cartesian.size},""" +
-            s""""bnlj":${bnlj.size},""" +
-            s""""fallback":${fallback.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-            s""""fat":${fat.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-            s""""fat_shuffle":${fatShuffle.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-            s""""fat_broadcast":${fatBcast.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
-      } catch {
-        case e: Exception => println(s"""{"q":"$name","err":"${e.getClass.getSimpleName}"}""")
+    try {
+      val (rows, fails) = report(spark, args(0), planDir)
+      def strs(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+      rows.foreach { r =>
+        println(s"""{"q":"${r.name}","unbounded_window":${r.unboundedWindow},""" +
+          s""""cartesian":${r.cartesian},"bnlj":${r.bnlj},""" +
+          s""""fallback":${strs(r.fallback.map(_.split('.').last))},""" +
+          s""""fat":${strs(r.fat)},"fat_shuffle":${strs(r.fatShuffle)},""" +
+          s""""fat_broadcast":${strs(r.fatBroadcast)},"tables":${r.tables},""" +
+          s""""direct_scans":${r.directScans},"cached_scans":${r.cachedScans},""" +
+          s""""excess":${r.directScans - r.tables},"exchanges":${r.exchanges},""" +
+          s""""reused":${r.reused},"dup_unreused":${r.dupUnreused}}""")
       }
-    }
-    spark.stop()
+      fails.foreach { case (name, err) => println(f"$name%-34s FAILED TO PLAN: $err") }
+      println(s"[plan-audit] ${rows.size} queries: ${rows.map(_.exchanges).sum} live " +
+        s"exchanges, ${rows.map(_.reused).sum} reused stubs, " +
+        s"${rows.map(_.dupUnreused).sum} canonical duplicates unreused " +
+        s"(${rows.count(_.dupUnreused > 0)} queries affected); ${fails.size} failed to plan")
+    } finally spark.stop()
   }
 }

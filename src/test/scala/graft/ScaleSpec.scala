@@ -482,6 +482,19 @@ class ScaleSpec extends SparkSpec {
     assert(byDecile(10) < byDecile(9))
   }
 
+  // Every registry audit below reads this one report: each registered
+  // query is planned once as the session is configured and once in the
+  // big-corpus regime (PlanAudit.bigCorpus), with FrameCache off and the
+  // cache cleared before every build.
+  private lazy val audit = graft.tools.PlanAudit.report(spark, "/root/testdata/sf0.001")
+  private def auditRows: Seq[graft.tools.PlanAudit.PlanRow] = {
+    val (rows, fails) = audit
+    // a query that throws at planning time silently vanished from the
+    // census in the r12 shape — it is a first-class failure here
+    assert(fails.isEmpty, s"queries failed to plan during the audit: $fails")
+    rows
+  }
+
   test("registry audit: only the exact RFM/Pareto parity forms carry an UNBOUNDED global window") {
     // Global-ORDER-BY windows plan Exchange SinglePartition + WindowExec —
     // the one shape that serializes a whole frame through one reducer.
@@ -498,19 +511,12 @@ class ScaleSpec extends SparkSpec {
     //    scale-safe bucketed twins (q_rfm_bucketed, q_revenue_
     //    concentration_bucketed) are the documented default at scale —
     //    and any NEW query joining it fails this audit.
-    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Window => LWindow}
-    val sf = "/root/testdata/sf0.001"
-    def hasLimit(p: LogicalPlan): Boolean =
-      p.collectFirst { case _: GlobalLimit => (); case _: LocalLimit => () }.nonEmpty
+    // (PlanRow.unboundedWindow: a global window with no LIMIT below it)
     // operators whose global window runs on a PARAMETER-bounded grain
     // (documented in their scaladoc), not on corpus rows
     val boundedGrain = Set("q_vocab_growth", "q_funnel_dropoff")
-    val unbounded = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = fn(spark, sf).queryExecution.optimizedPlan
-      val globalWindows = plan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
-      if (globalWindows.nonEmpty && !globalWindows.forall(w => hasLimit(w.child))
-          && !boundedGrain.contains(name)) Some(name) else None
-    }
+    val unbounded = auditRows
+      .filter(r => r.unboundedWindow && !boundedGrain.contains(r.name)).map(_.name)
     assert(unbounded.toSet === Set("q_rfm", "q_revenue_concentration"),
       s"unbounded global windows outside the parity allowlist: $unbounded")
   }
@@ -544,9 +550,6 @@ class ScaleSpec extends SparkSpec {
     // PlanAudit.allNodes: plain collect stops at the InMemoryTableScan
     // (persist boundaries) and AdaptiveSparkPlanExec leaf curtains, which
     // until r9 session 5 hid e.g. the LSH bands subtree entirely.
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    val sf = "/root/testdata/sf0.001"
     val allowedFallback = Set(
       "ArrayAggregate", "ArrayFilter", "ArraySort", "ArrayTransform",
       // CollectSet joined in r18: itemCooccurrence's per-user item-set
@@ -582,27 +585,19 @@ class ScaleSpec extends SparkSpec {
     // q_ann_topk_ivf[(_trained)] keep one BNLJ each — the numQueries-row
     // PROBE crossjoin, which stays windowed by design (parameter-bounded
     // input).
-    val bnljSeen = scala.collection.mutable.Set[String]()
-    sys.props("graft.frame.cache.disable") = "1"
-    try SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val nodes = graft.tools.PlanAudit.allNodes(fn(spark, sf).queryExecution.sparkPlan)
-      assert(nodes.collect { case c: CartesianProductExec => c }.isEmpty,
-        s"$name plans a CartesianProduct")
-      if (nodes.collect { case j: BroadcastNestedLoopJoinExec => j }.nonEmpty)
-        bnljSeen += name
-      val fallback = nodes.flatMap(_.expressions.flatMap(_.collect {
-        case e: CodegenFallback => e.getClass
-      })).distinct
-      val rogue = fallback.filterNot(c => allowedFallback(c.getSimpleName))
-      assert(rogue.isEmpty, s"$name carries unvetted interpreted expressions: " +
-        rogue.map(_.getName).mkString(", "))
-      val graftFallback = fallback
-        .filter(_.getName.startsWith("graft.")).map(_.getSimpleName).toSet
+    def simpleName(cls: String) = cls.split('.').last
+    auditRows.foreach { r =>
+      assert(r.cartesian === 0, s"${r.name} plans a CartesianProduct")
+      val rogue = r.fallback.filterNot(c => allowedFallback(simpleName(c)))
+      assert(rogue.isEmpty, s"${r.name} carries unvetted interpreted expressions: " +
+        rogue.mkString(", "))
+      val graftFallback = r.fallback.filter(_.startsWith("graft.")).map(simpleName).toSet
       assert(graftFallback.subsetOf(Set("CountMinSketchAgg")),
-        s"$name has engine expressions without doGenCode: $graftFallback")
-    } finally sys.props.remove("graft.frame.cache.disable")
-    assert(bnljSeen.toSet === bnljPin,
-      s"BNLJ set drifted; added=${bnljSeen.toSet -- bnljPin} removed=${bnljPin -- bnljSeen}")
+        s"${r.name} has engine expressions without doGenCode: $graftFallback")
+    }
+    val bnljSeen = auditRows.filter(_.bnlj > 0).map(_.name).toSet
+    assert(bnljSeen === bnljPin,
+      s"BNLJ set drifted; added=${bnljSeen -- bnljPin} removed=${bnljPin -- bnljSeen}")
   }
 
   test("registry audit: no fat column crosses a shuffle except the two documented co-location persists") {
@@ -635,31 +630,16 @@ class ScaleSpec extends SparkSpec {
     // candidate-doc semi joins (corpus text / shingle arrays to meet the
     // id list) became Bloom prefilters + exact inner-join verification,
     // so the fat bytes stay on the scan side of every exchange.
-    val sf = "/root/testdata/sf0.001"
     val fatPin: Map[String, Set[String]] = Map(
       "q_embed_neardup_lsh" -> Set("embedding->embedding"),
       "q_semantic_dedup" -> Set("embedding->embedding"))
-    val oldAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val oldBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    sys.props("graft.frame.cache.disable") = "1"
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.catalog.clearCache()
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        val census = graft.tools.PlanAudit
-          .fatShuffled(fn(spark, sf).queryExecution.executedPlan).toSet
-        assert(census === fatPin.getOrElse(name, Set.empty[String]),
-          s"$name fat-shuffle census drifted: got $census, pinned " +
-            s"${fatPin.getOrElse(name, Set.empty[String])} — a new entry means " +
-            "corpus payload bytes now cross an exchange (fix the operator or " +
-            "document the co-location and extend the pin)")
-      }
-    } finally {
-      sys.props.remove("graft.frame.cache.disable")
-      spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldBroadcast)
-      spark.catalog.clearCache()
+    auditRows.foreach { r =>
+      val census = r.fatShuffle.toSet
+      assert(census === fatPin.getOrElse(r.name, Set.empty[String]),
+        s"${r.name} fat-shuffle census drifted: got $census, pinned " +
+          s"${fatPin.getOrElse(r.name, Set.empty[String])} — a new entry means " +
+          "corpus payload bytes now cross an exchange (fix the operator or " +
+          "document the co-location and extend the pin)")
     }
   }
 
@@ -697,23 +677,16 @@ class ScaleSpec extends SparkSpec {
       // same scoreCandidates bound as every sibling above
       "q_ann_topk_pq" -> Set("embedding->q_emb"),
       "q_ann_topk_ivfpq" -> Set("embedding->q_emb"))
-    val oldAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val oldBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    sys.props("graft.frame.cache.disable") = "1"
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.catalog.clearCache()
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        val census = graft.tools.PlanAudit
-          .fatBroadcast(fn(spark, sf).queryExecution.executedPlan).toSet
-        assert(census === bcastPin.getOrElse(name, Set.empty[String]),
-          s"$name fat-broadcast census drifted: got $census, pinned " +
-            s"${bcastPin.getOrElse(name, Set.empty[String])} — an `!unbounded` " +
-            "suffix means a corpus-sized frame sits behind a broadcast() hint " +
-            "(driver OOM at scale); a new entry needs its parameter bound " +
-            "documented and pinned")
-      }
+    auditRows.foreach { r =>
+      val census = r.fatBroadcast.toSet
+      assert(census === bcastPin.getOrElse(r.name, Set.empty[String]),
+        s"${r.name} fat-broadcast census drifted: got $census, pinned " +
+          s"${bcastPin.getOrElse(r.name, Set.empty[String])} — an `!unbounded` " +
+          "suffix means a corpus-sized frame sits behind a broadcast() hint " +
+          "(driver OOM at scale); a new entry needs its parameter bound " +
+          "documented and pinned")
+    }
+    graft.tools.PlanAudit.bigCorpus(spark) {
       // the marker is live, not vacuous: the exact regression shape the
       // ADVICE found (an UNFILTERED corpus frame behind broadcast()) must
       // come back flagged
@@ -739,16 +712,11 @@ class ScaleSpec extends SparkSpec {
       val masked = graft.tools.PlanAudit
         .fatBroadcast(maskShape.queryExecution.executedPlan)
       assert(masked.contains("embedding->q_emb!unbounded"), masked.toString)
-    } finally {
-      sys.props.remove("graft.frame.cache.disable")
-      spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldBroadcast)
-      spark.catalog.clearCache()
     }
   }
 
   test("registry audit: redundant-evaluation census — excess scans pinned to the documented multi-pass designs") {
-    // The r12 ScanCensus finding class: a frame consumed by two plan
+    // The r12 scan-census finding class: a frame consumed by two plan
     // branches re-runs its WHOLE scan/shuffle lineage per branch, because
     // ReuseExchange does not unify same-lineage subtrees once anything
     // differs above them (pushed-down filters on a grouping key, renamed
@@ -779,28 +747,14 @@ class ScaleSpec extends SparkSpec {
     val excessPin = Map(
       "q_collocations" -> 3, "q_dup_spans" -> 2, "q_dup_spans_filter" -> 3,
       "q_dup_spans_remove" -> 2)
-    sys.props("graft.frame.cache.disable") = "1"
-    try {
-      val (rows, fails) = graft.tools.ScanCensus.report(spark, "/root/testdata/sf0.001")
-      // a query that throws at planning time silently vanished from the
-      // census in the r12 shape — it is now a first-class failure here
-      assert(fails.isEmpty, s"queries failed to plan during census: $fails")
-      val got = rows
-        .map { case (name, tables, direct, _) => name -> (direct - tables) }
-        .filter(_._2 >= 2).toMap
-      assert(got === excessPin,
-        s"excess-scan census drifted: got $got, pinned $excessPin — a new " +
-          "entry re-evaluates a table's lineage in multiple plan branches " +
-          "(the windowFunnel regression shape); document the design or " +
-          "persist the shared frame")
-    } finally {
-      sys.props.remove("graft.frame.cache.disable")
-      // report() clears between queries and at exit, but keep the suite-level
-      // guarantee symmetric with the sibling registry-audit tests: nothing
-      // this test planned may leak InMemoryRelations into later suites
-      // (Test/fork runs every suite in one JVM)
-      spark.catalog.clearCache()
-    }
+    val got = auditRows
+      .map(r => r.name -> (r.directScans - r.tables))
+      .filter(_._2 >= 2).toMap
+    assert(got === excessPin,
+      s"excess-scan census drifted: got $got, pinned $excessPin — a new " +
+        "entry re-evaluates a table's lineage in multiple plan branches " +
+        "(the windowFunnel regression shape); document the design or " +
+        "persist the shared frame")
   }
 
   test("registry audit: exchange-reuse census — no plan-identical exchange survives unreused") {
@@ -819,33 +773,17 @@ class ScaleSpec extends SparkSpec {
     // every identical exchange pair is unified into a ReusedExchangeExec
     // stub. A new entry means reuse silently broke for that query: at
     // 100 TB the duplicate re-executes a full shuffle stage per consumer.
-    val oldAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val oldBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    sys.props("graft.frame.cache.disable") = "1"
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.catalog.clearCache()
-      val (rows, fails) = graft.tools.ExchangeCensus.report(spark, "/root/testdata/sf0.001")
-      assert(fails.isEmpty, s"queries failed to plan during census: $fails")
-      val dup = rows.filter(_._4 > 0).map { case (n, ex, re, d) =>
-        n -> ((ex, re, d))
-      }.toMap
-      assert(dup.isEmpty,
-        s"exchange-reuse census drifted: $dup — a canonical-duplicate " +
-          "exchange survived preparation unreused (a full redundant " +
-          "shuffle stage per consumer at scale); find why ReuseExchange " +
-          "missed it or restructure the plan to share the frame")
-      // the counter is live, not vacuous: reuse DOES fire on the engine's
-      // plans — at least one query must carry a ReusedExchangeExec stub
-      assert(rows.exists(_._3 > 0),
-        "no query planned any ReusedExchangeExec: either the preparation " +
-          "rule stopped running or the census walk went blind")
-    } finally {
-      sys.props.remove("graft.frame.cache.disable")
-      spark.conf.set("spark.sql.adaptive.enabled", oldAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldBroadcast)
-      spark.catalog.clearCache()
-    }
+    val dup = auditRows.filter(_.dupUnreused > 0)
+      .map(r => r.name -> ((r.exchanges, r.reused, r.dupUnreused))).toMap
+    assert(dup.isEmpty,
+      s"exchange-reuse census drifted: $dup — a canonical-duplicate " +
+        "exchange survived preparation unreused (a full redundant " +
+        "shuffle stage per consumer at scale); find why ReuseExchange " +
+        "missed it or restructure the plan to share the frame")
+    // the counter is live, not vacuous: reuse DOES fire on the engine's
+    // plans — at least one query must carry a ReusedExchangeExec stub
+    assert(auditRows.exists(_.reused > 0),
+      "no query planned any ReusedExchangeExec: either the preparation " +
+        "rule stopped running or the census walk went blind")
   }
 }
