@@ -336,7 +336,6 @@ object SparkEntry {
     // capacity 16, two keys above the membership threshold.
     "q_spacesaving_approx" -> ((s, d) => {
       import s.implicits._
-      import graft.ext.CacheScope.TrackedPersist
       val cap = 16
       val amp = "CASE token WHEN 'join' THEN 201 WHEN 'hash' THEN 51 ELSE 1 END"
       // exact side from the COMPACT vocabulary frame: counting the
@@ -359,7 +358,7 @@ object SparkEntry {
       val exact = base.groupBy(col("token"))
         .agg(count(lit(1)).as("base_cnt"))
         .select(col("token"), (col("base_cnt") * expr(amp)).as("exact_cnt"))
-        .persistTracked()
+        .persist()
       val tot = exact.agg(sum(col("exact_cnt")).as("n"))
       val approx = base
         .select(expr(s"explode(array_repeat(token, $amp))").as("token"))

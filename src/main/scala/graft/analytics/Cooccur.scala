@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ext.CacheScope.TrackedPersist
 
 /**
  * Item co-occurrence with lift — the item-to-item collaborative-filtering
@@ -67,7 +66,7 @@ object Cooccur {
       .filter(col("k").isNotNull)
       .groupBy(col("user_id"))
       .agg(expr(s"slice(sort_array(collect_set(k)), 1, $maxItemsPerUser)").as("ks"))
-      .persistTracked()
+      .persist()
     val totals = uk.select(explode(col("ks")).as("k"))
       .groupBy(col("k")).agg(count(lit(1)).as("users"))
     // uk is one row per user with >= 1 item — count(*) IS countDistinct

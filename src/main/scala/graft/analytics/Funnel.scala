@@ -3,7 +3,6 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ext.CacheScope.TrackedPersist
 
 /**
  * Conversion-funnel analysis (A4/A12, stream_processor.py:186-229).
@@ -121,7 +120,7 @@ object Funnel {
     // once. The LAST stage has a single consumer and stays unpinned.
     val s1 = events.filter(col("event") === steps.head)
       .groupBy(col("visitorid")).agg(min(col("event_time")).as("t1"))
-      .persistTracked()
+      .persist()
     // fold the remaining steps: stage k needs t_{k-1} (strictly after) and
     // t1 (window bound), both joined back by visitor key
     val stages = steps.indices.tail.foldLeft(Vector(s1)) { (acc, i) =>
@@ -132,7 +131,7 @@ object Funnel {
         .join(s1.select(col("visitorid"), col("t1").as("w1")), "visitorid")
         .filter(col("event_time") > col(prevT) && col("event_time") <= col("w1") + iv)
         .groupBy(col("visitorid")).agg(min(col("event_time")).as(s"t${i + 1}"))
-      acc :+ (if (i == steps.indices.last) next else next.persistTracked())
+      acc :+ (if (i == steps.indices.last) next else next.persist())
     }
     val joined = stages.tail.foldLeft(s1) { (acc, st) =>
       acc.join(st, Seq("visitorid"), "left")

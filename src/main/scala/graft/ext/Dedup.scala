@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import CacheScope.TrackedPersist
 
 import TextAnalysis.withShingles
 
@@ -74,7 +73,6 @@ object Dedup {
    * 32-bit shingle hash. One narrow projection — no shuffle, no UDF.
    */
   def minhashSignatures(docs: DataFrame, shingleSize: Int = 3): DataFrame = {
-    graft.functions.SketchExprs.register(docs.sparkSession)
     // fused compiled pipeline: tokens -> distinct shingles -> md5-uint32 ->
     // 16-perm signature; same values as the HOF formulation mirrored by the
     // DuckDB oracle, minus four interpreted lambda passes
@@ -104,7 +102,7 @@ object Dedup {
     // materialize signatures once: every branch of the self-joins below
     // would otherwise recompute the full tokenize→shingle→hash lineage
     // (at cluster scale this persist is "write the signature table")
-    val sigs = minhashSignatures(docs, shingleSize).persistTracked()
+    val sigs = minhashSignatures(docs, shingleSize).persist()
     val allBands = minhashBands(sigs)
     // skew guard: a pathological bucket (boilerplate/empty-page band key
     // shared by millions of docs) would make the pair join quadratic in
@@ -148,7 +146,7 @@ object Dedup {
     * set → (doc1, doc2, sh1, sh2). The shingle frame is persisted because
     * both joins read it (cache lifetime caller-owned, as elsewhere). */
   private def candidateShinglePairs(docs: DataFrame, shingleSize: Int): DataFrame = {
-    val sh = withShingles(docs, shingleSize).select(col("doc_id"), col("shingles")).persistTracked()
+    val sh = withShingles(docs, shingleSize).select(col("doc_id"), col("shingles")).persist()
     minhashCandidatePairs(docs, shingleSize).select("doc1", "doc2")
       .join(sh.select(col("doc_id").as("doc1"), col("shingles").as("sh1")), "doc1")
       .join(sh.select(col("doc_id").as("doc2"), col("shingles").as("sh2")), "doc2")
@@ -428,7 +426,6 @@ object Dedup {
    * Nested higher-order expressions — still fully codegen'd.
    */
   def simhash(docs: DataFrame): DataFrame = {
-    graft.functions.SketchExprs.register(docs.sparkSession)
     // fused compiled pipeline (token md5 + bit-vote) — same bit rule as the
     // nested-aggregate HOF formulation mirrored by the DuckDB oracle
     TextAnalysis.withTokens(docs)
@@ -463,7 +460,7 @@ object Dedup {
     require(bitsPerBand > 0 && bitsPerBand < 32 && 32 % bitsPerBand == 0,
       s"bitsPerBand must be a proper divisor of 32, got $bitsPerBand")
     val numBands = 32 / bitsPerBand
-    val sh = simhash(docs).persistTracked()
+    val sh = simhash(docs).persist()
     val allBands = sh.select(col("doc_id"), col("simhash"),
       posexplode(expr(
         s"""transform(sequence(0, ${numBands - 1}), b ->
@@ -512,7 +509,7 @@ object Dedup {
       .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("blk")).orderBy(col("simhash"), col("doc_id"))))
-      .persistTracked() // both sides of the successor join re-read it
+      .persist() // both sides of the successor join re-read it
     val succ = sim.select(col("blk"), col("rn"),
         col("doc_id").as("d2"), col("simhash").as("sh2"))
       .withColumn("k", explode(expr(s"sequence(1, $window)")))
@@ -590,7 +587,7 @@ object Dedup {
 
   /** Tokenized docs projected to the span-census grain — shared prefix of
     * [[dupSpanCoverage]] and [[removeDupSpans]]. */
-  private[graft] def spanToks(docs: DataFrame): DataFrame =
+  private def spanToks(docs: DataFrame): DataFrame =
     TextAnalysis.withTokens(docs)
       .select(col("doc_id"), col("toks"), size(col("toks")).cast("long").as("n_tokens"))
 
@@ -598,7 +595,7 @@ object Dedup {
     * where `gh` is the 60-bit gram hash — 60 bits, not 32, because the
     * census downstream makes a HARD "seen in 2+ docs" decision on this
     * key, and a 32-bit space saturates by birthday at corpus scale. */
-  private[graft] def spanOccurrences(toks: DataFrame, n: Int): DataFrame = {
+  private def spanOccurrences(toks: DataFrame, n: Int): DataFrame = {
     val parts = (0 until n).map(k => s"toks[s+$k]").mkString(", ")
     toks
       .where(col("n_tokens") >= n)
@@ -624,14 +621,6 @@ object Dedup {
         .where(col("count") >= 2)
         .select(col("gh"))
     }
-
-  /** Public batch form of the duplicated-gram census — one column `gh` of
-    * 60-bit gram hashes appearing in ≥ 2 distinct documents. The ground
-    * truth the STREAMING census ([[graft.stream.StreamCensus]]) must
-    * converge to after ingesting the same corpus in any micro-batch
-    * cuts. */
-  def dupGramCensus(docs: DataFrame, n: Int = 5): DataFrame =
-    dupGrams(spanOccurrences(spanToks(docs), n), n, None, "")
 
   /**
    * Normalized-exact dedup — the fidelity between byte-exact and near-dup:
@@ -762,13 +751,13 @@ object Dedup {
     // two consumers (touched set + anti join): persist only when the
     // frame is NOT cache-backed (a hit is already a cheap parquet scan)
     val covered =
-      if (FrameCache.active(cacheDir)) coveredRaw else coveredRaw.persistTracked()
+      if (FrameCache.active(cacheDir)) coveredRaw else coveredRaw.persist()
     // THREE consumers (positions semi, rebuilt semi, untouched anti), each
     // of which would otherwise re-run the distinct's shuffle over the
     // covered frame; one long per touched doc — the cheapest frame in the
     // operator to pin, unconditionally (even cache-backed, the distinct
     // itself is the repeated cost, not the scan under it)
-    val touched = covered.select(col("doc_id")).distinct().persistTracked()
+    val touched = covered.select(col("doc_id")).distinct().persist()
     // token-grain rebuild for TOUCHED docs only (see scaladoc)
     val positions = toks.join(touched, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), posexplode(col("toks")))

@@ -15,34 +15,15 @@ import graft.functions.ZOrder2
  * ([[graft.functions.ZOrder2]]) makes every written file a small rectangle
  * in (x, y) space, so parquet min/max stats prune selective scans on
  * EITHER or BOTH dimensions. This is the same layout idea as
- * Delta/Iceberg Z-ordering, expressed with stock Spark operators:
- * `repartitionByRange(z)` (range exchange with a sampled histogram — no
- * single-reducer hotspot) + `sortWithinPartitions(z)`.
+ * Delta/Iceberg Z-ordering; a writer applies it with stock Spark
+ * operators, `repartitionByRange(z)` + `sortWithinPartitions(z)` over
+ * [[zValue]].
  */
 object Layout {
 
   /** The z-value column: low-31-bit Morton interleave of two LONG dims. */
   def zValue(x: Column, y: Column): Column =
     Shim.column(ZOrder2(Shim.expression(x.cast("long")), Shim.expression(y.cast("long"))))
-
-  /** Cluster `df` for writing: range-partition + sort by the z-value of
-    * (x, y). Files written from the result have tight min/max bounds on
-    * both dimensions. The helper column is dropped; ordering carries. */
-  def clusterByZ(df: DataFrame, x: Column, y: Column, numPartitions: Int): DataFrame =
-    df.withColumn("_z", zValue(x, y))
-      .repartitionByRange(numPartitions, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-
-  /** Hive-style partitioned write: one directory per `partitionCol` value.
-    * The third leg of the layout story next to [[clusterByZ]] and
-    * bucketing: a reader filtering on the partition column never opens
-    * non-matching directories at all (PartitionFilters in the scan, zero
-    * IO — stronger than min/max skipping). Use for the coarse,
-    * low-cardinality dimension (event date, lang, source); z-order/bucket
-    * WITHIN each partition for the fine dimensions. */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
 
   /** Oracle-checked z-value computation over events: the (user, time)
     * pair — the canonical clickstream layout (point-lookups by user,

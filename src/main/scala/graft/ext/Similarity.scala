@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import CacheScope.TrackedPersist
 
 /**
  * Similarity search over an embedding column (`array<float>`): brute-force
@@ -19,9 +18,7 @@ import CacheScope.TrackedPersist
  * corpus, assignments) that the returned lazy DataFrame still references,
  * so they cannot unpersist before the caller's terminal action — the
  * SESSION owns their lifetime. Batch drivers (Verify, Bench) call
- * `spark.catalog.clearCache()` between queries; long-lived multi-tenant
- * sessions wrap each query in [[CacheScope.withCached]], which reclaims
- * exactly the frames the wrapped operators persisted.
+ * `spark.catalog.clearCache()` between queries.
  *
  * Scale design (100 TB): brute force is O(|Q|·N) — fine for small query
  * sets, never for all-pairs. The LSH variant buckets vectors by hyperplane
@@ -44,7 +41,6 @@ object Similarity {
 
   /** vec_id + embedding + precomputed norm. */
   def withNorms(embeddings: DataFrame): DataFrame = {
-    graft.functions.SketchExprs.register(embeddings.sparkSession)
     embeddings.select(col("vec_id"), col("embedding"), norm("embedding").as("nrm"))
   }
 
@@ -163,7 +159,7 @@ object Similarity {
     val bands = Dedup.capBuckets(
       sig.select(col("vec_id"), col("embedding"), col("nrm"), posexplode(col("bands")))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key"),
-      maxBucketSize).persistTracked(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      maxBucketSize).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val b1 = bands.select(col("band"), col("band_key"),
       col("vec_id").as("id1"), col("embedding").as("emb1"), col("nrm").as("nrm1"))
     val b2 = bands.select(col("band"), col("band_key"),
@@ -185,7 +181,7 @@ object Similarity {
               numBands: Int = NumBands,
               planesPerBand: Int = PlanesPerBand,
               maxBucketSize: Option[Int] = None): DataFrame = {
-    val sig = withLshBands(embeddings, dim, numBands, planesPerBand).persistTracked()
+    val sig = withLshBands(embeddings, dim, numBands, planesPerBand).persist()
     val allBands = sig.select(col("vec_id"), posexplode(col("bands")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
     // probes come from the uncapped rows (a query always knows its own
@@ -251,7 +247,7 @@ object Similarity {
    */
   def ivfTopK(embeddings: DataFrame, numQueries: Int = 10, k: Int = 5,
               numCentroids: Int = 8, nprobe: Int = 2): DataFrame = {
-    val base = withNorms(embeddings).persistTracked()
+    val base = withNorms(embeddings).persist()
     ivfSearch(base, initCentroids(base, numCentroids), numQueries, k, nprobe)
   }
 
@@ -410,7 +406,7 @@ object Similarity {
    */
   def kmeansCodebook(embeddings: DataFrame, numCentroids: Int = 8,
                      iters: Int = 2): DataFrame =
-    kmeansFromBase(withNorms(embeddings).persistTracked(), numCentroids, iters)
+    kmeansFromBase(withNorms(embeddings).persist(), numCentroids, iters)
 
   /** Lloyd's iterations over an already-normed (and ideally persisted)
     * base — lets callers that also search share ONE normed corpus scan.
@@ -485,7 +481,7 @@ object Similarity {
                       datasetTag: String = ""): DataFrame =
     FrameCache.cached(embeddings.sparkSession, cacheDir,
         s"codebook_v${CodebookFormatVersion}_c${numCentroids}_i$iters", datasetTag) {
-      kmeansFromBase(withNorms(embeddings).persistTracked(), numCentroids, iters)
+      kmeansFromBase(withNorms(embeddings).persist(), numCentroids, iters)
     }
 
   /** Filesystem fingerprint of a dataset path (file or directory): folds
@@ -516,7 +512,7 @@ object Similarity {
                      numCentroids: Int = 8, nprobe: Int = 2, iters: Int = 2,
                      cacheDir: Option[String] = None,
                      datasetTag: String = ""): DataFrame = {
-    val base = withNorms(embeddings).persistTracked()
+    val base = withNorms(embeddings).persist()
     val cents = cacheDir match {
       case Some(_) => trainedCodebook(embeddings, numCentroids, iters, cacheDir, datasetTag)
       case None => kmeansFromBase(base, numCentroids, iters)
@@ -571,7 +567,7 @@ object Similarity {
              m: Int = 8, ksub: Int = 8, iters: Int = 2, rerank: Int = 8,
              cacheDir: Option[String] = None,
              datasetTag: String = ""): DataFrame = {
-    val base = withNorms(embeddings).persistTracked()
+    val base = withNorms(embeddings).persist()
     val books = pqSubspaceBooks(base, m, ksub, iters, cacheDir, datasetTag)
     // one batched collect for all m books (the encode columns); the ADC
     // tables below still read the book FRAMES (broadcast join sides)
@@ -610,14 +606,14 @@ object Similarity {
           s"$datasetTag#pq$m.$mi")
         case None => kmeansFromBase(
           subEmb.select(col("vec_id"), col("embedding"),
-            norm("embedding").as("nrm")).persistTracked(), ksub, iters)
+            norm("embedding").as("nrm")).persist(), ksub, iters)
       }
     }
 
   /** Encode pass: ONE corpus scan appending m narrow argmax code columns
     * to `start`, dropping the embedding, and PERSISTING the result — this
     * skinny frame is the PQ index; everything downstream reads it, never
-    * the embeddings. persistTracked is LOAD-BEARING, not a cache nicety:
+    * the embeddings. The persist is LOAD-BEARING, not a cache nicety:
     * unpersisted, the m code expressions ride into the pipelined join
     * chain as UNEVALUATED projections and re-inline at every consumer —
     * measured 68 s for the 8-join chain at sf10 vs 2.9 s materialized
@@ -634,7 +630,7 @@ object Similarity {
         .withColumn(s"code$mi", codebookColFrom(bookRows(mi),
           col(s"_s$mi"), sqrt(expr(s"graft_dot(_s$mi, _s$mi)"))))
         .drop(s"_s$mi")
-    }.drop("embedding").persistTracked()
+    }.drop("embedding").persist()
 
   /** ADC tables: per subspace, numQueries × ksub rows of exact
     * sub-dot-products + squared codeword norms; parameter-bounded, so
@@ -707,7 +703,7 @@ object Similarity {
                 m: Int = 8, ksub: Int = 8, iters: Int = 2, rerank: Int = 8,
                 cacheDir: Option[String] = None,
                 datasetTag: String = ""): DataFrame = {
-    val base = withNorms(embeddings).persistTracked()
+    val base = withNorms(embeddings).persist()
     val coarse = cacheDir match {
       case Some(_) => trainedCodebook(embeddings, numCentroids, iters, cacheDir, datasetTag)
       case None => kmeansFromBase(base, numCentroids, iters)
@@ -799,7 +795,7 @@ object Similarity {
                     threshold: Double = 0.35, iters: Int = 2,
                     cacheDir: Option[String] = None,
                     datasetTag: String = ""): DataFrame = {
-    val base = withNorms(embeddings).persistTracked()
+    val base = withNorms(embeddings).persist()
     val k =
       if (numCentroids > 0) numCentroids
       else {
@@ -821,7 +817,7 @@ object Similarity {
     val assign = base.withColumn("cluster", nearestCentroidCol(cents))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cluster"))
       .repartition(col("cluster"))
-      .persistTracked()
+      .persist()
     val a1 = assign.select(col("cluster").as("cl1"), col("vec_id").as("id1"),
       col("embedding").as("emb1"), col("nrm").as("nrm1"))
     val a2 = assign.select(col("cluster").as("cl2"), col("vec_id").as("id2"),

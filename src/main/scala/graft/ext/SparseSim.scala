@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import CacheScope.TrackedPersist
 
 /**
  * Sparse count-vector cosine similarity with inverted-index blocking —
@@ -40,7 +39,6 @@ object SparseSim {
   /** Per-document term-frequency vector in long form over HASHED tokens:
     * (doc_id, tok, cnt) with multiplicity preserved before the count. */
   def termCounts(docs: DataFrame): DataFrame = {
-    graft.functions.SketchExprs.register(docs.sparkSession)
     TextAnalysis.withTokens(docs)
       .select(col("doc_id"), explode(expr("graft_token_hash(toks)")).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt"))
@@ -51,7 +49,6 @@ object SparseSim {
    * (doc1 < doc2) sharing at least one shingle with df ∈ [minDf, maxDf].
    */
   def rareShingleCandidates(docs: DataFrame, minDf: Int = 2, maxDf: Int = 3): DataFrame = {
-    graft.functions.SketchExprs.register(docs.sparkSession)
     // persist the COMPACT (doc_id, hashed-shingle-array) frame — one
     // hashing pass over the corpus; the three posting consumers (df
     // aggregate + both pair-join branches) re-explode from cache, which
@@ -59,7 +56,7 @@ object SparseSim {
     // (the decontaminate pattern)
     val hs = TextAnalysis.withTokens(docs)
       .select(col("doc_id"), expr("graft_shingle_hash(toks, 3)").as("hs"))
-      .persistTracked()
+      .persist()
     val post = hs.select(col("doc_id"), explode(col("hs")).as("g"))
     val rare = post.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df").between(minDf, maxDf)).select("g")
@@ -92,7 +89,6 @@ object SparseSim {
    */
   def prefixJaccardPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold must be in (0,1], got $threshold")
-    graft.functions.SketchExprs.register(docs.sparkSession)
     // compact per-doc distinct hashed shingles: array_distinct dedupes
     // IN-ARRAY (no shuffle — the exploded-frame .distinct() this replaces
     // was the dominant cost), and the set size is a doc-level column, not
@@ -103,7 +99,7 @@ object SparseSim {
         expr("array_distinct(graft_shingle_hash(toks, 3))").as("hs"))
       .filter(size(col("hs")) > 0)
       .withColumn("sz", size(col("hs")).cast("long"))
-      .persistTracked()
+      .persist()
     val post = hs.select(col("doc_id"), col("sz"), explode(col("hs")).as("tok"))
     val dfreq = post.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val prefix = post
@@ -118,7 +114,7 @@ object SparseSim {
       // (two shuffles per side; ReuseExchange does not unify renamed
       // branches — the r12 q_ab_test/termDocFreq finding). Four longs per
       // PREFIX entry (≤ |d|−⌈t·|d|⌉+1 per doc, ~20% of shingles at t=0.8)
-      .persistTracked()
+      .persist()
     // positional filter (the ppjoin bound): both docs order tokens by the
     // same global (df, value) order, so at the EARLIEST shared prefix
     // token nothing before it overlaps — overlap ≤ 1 + min(suffix
@@ -147,7 +143,7 @@ object SparseSim {
     // below, so the result is bit-identical.
     val candDocs = cand.select(col("doc1").as("doc_id"))
       .union(cand.select(col("doc2").as("doc_id")))
-      .persistTracked()
+      .persist()
     val vtoks = hs
       .filter(graft.operators.BloomJoin.probeFor(candDocs, "doc_id", "doc_id"))
       .select(col("doc_id"), col("sz"), explode(col("hs")).as("tok"))
@@ -172,7 +168,7 @@ object SparseSim {
    */
   def cosinePairs(docs: DataFrame, minDf: Int = 2, maxDf: Int = 3,
                   minSim: Double = 0.5): DataFrame = {
-    val cand = rareShingleCandidates(docs, minDf, maxDf).persistTracked()
+    val cand = rareShingleCandidates(docs, minDf, maxDf).persist()
     // term vectors ONLY for docs in a candidate pair — via a BLOOM
     // prefilter rather than a semi join: both keep the expensive
     // explode+count off the full corpus, but the semi join shuffled
@@ -184,7 +180,7 @@ object SparseSim {
     // inner joins against `cand` below, so the result is bit-identical.
     val candDocs = cand.select(col("doc1").as("doc_id"))
       .union(cand.select(col("doc2").as("doc_id")))
-      .persistTracked()
+      .persist()
     // the norm rides along as a doc-partitioned window over the tf frame —
     // the dots aggregate then carries it (constant per group, min() for
     // determinism), saving two join stages over a separate norms frame;
@@ -192,7 +188,7 @@ object SparseSim {
     val tf = termCounts(
         docs.filter(graft.operators.BloomJoin.probeFor(candDocs, "doc_id", "doc_id")))
       .withColumn("nrm", expr("sqrt(CAST(sum(cnt * cnt) OVER (PARTITION BY doc_id) AS DOUBLE))"))
-      .persistTracked()
+      .persist()
     cand
       .join(tf.select(col("doc_id").as("doc1"), col("tok"),
         col("cnt").as("c1"), col("nrm").as("nrm1")), "doc1")

@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import CacheScope.TrackedPersist
 
 /**
  * Text-analysis operators for an LLM training-data pipeline over the
@@ -504,7 +503,7 @@ object TextAnalysis {
     // token-shuffled twice for one result. Persist per the cms
     // convention (narrow integer frame; session owner reclaims).
     val tf = ex.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-      .persistTracked()
+      .persist()
     val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     tf.join(df, "token").select(col("doc_id"), col("token"), col("tf"), col("df"))
   }
@@ -528,7 +527,7 @@ object TextAnalysis {
     // avgdl), so it stays its own one-tokenize pass — two total for the
     // operator, down from four.
     val dl = withTokens(docs).select(col("doc_id"), size(col("toks")).as("dl"))
-      .persistTracked()
+      .persist()
     val stats = dl.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
     termDocFreq(docs)
       .join(dl, "doc_id")
@@ -552,12 +551,11 @@ object TextAnalysis {
    * pipeline would keep only the sketch.
    */
   def cmsTokenCounts(docs: DataFrame, width: Int = 256, depth: Int = 4): DataFrame = {
-    graft.functions.SketchExprs.register(docs.sparkSession)
     val P = 4294967311L
     // one scan: the exact per-token counts feed the sketch as WEIGHTED
     // inserts (value-identical to count-many +1 updates on the raw stream —
     // a sketch-only production pipeline would instead graft_cms(h) straight
-    // off the token stream with no groupBy at all, see StreamJob.streamingCms).
+    // off the token stream with no groupBy at all).
     // Persist convention as in Dedup/Similarity: the cached frame backs both
     // branches; the session owner reclaims it (Verify/Bench clearCache per
     // query — without the persist the corpus is scanned twice instead).
@@ -566,7 +564,7 @@ object TextAnalysis {
       .groupBy(col("token"))
       .agg(count(lit(1)).as("exact"))
       .withColumn("h", hash32(col("token")))
-      .persistTracked()
+      .persist()
     val sketch = perToken.agg(expr(s"graft_cms(h, exact, $width, $depth)").as("cms"))
     val estJ = (0 until depth).map { j =>
       expr(s"element_at(cms, CAST((${2 * j + 1} * h + ${104729L * j + 12345L}) % $P % $width AS INT) + ${j * width} + 1)")
@@ -640,7 +638,7 @@ object TextAnalysis {
     val sharded = counted
       .select(col("doc_id"), col("lang"), col("n_tokens"))
       .withColumn("_shard", expr(s"doc_id DIV ${shardSpan}L"))
-      .persistTracked()
+      .persist()
     val wIn = Window.partitionBy(col("lang"), col("_shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     // shard totals are one row per (lang, shard): the base-offset window
@@ -713,7 +711,6 @@ object TextAnalysis {
    */
   def decontaminate(docs: DataFrame, evalMod: Int = 97, shingleSize: Int = 3,
                     minOverlap: Int = 2): DataFrame = {
-    graft.functions.SketchExprs.register(docs.sparkSession)
     // hashed shingles via the compiled expression (one pass, no interpreted
     // concat_ws/transform lambdas) — overlap on the portable md5-uint32
     // values, which the oracle reproduces exactly. The train frame is
@@ -721,7 +718,7 @@ object TextAnalysis {
     // and n_shingles) would otherwise re-shingle the corpus.
     val sh = withTokens(docs)
       .select(col("doc_id"), expr(s"graft_shingle_hash(toks, $shingleSize)").as("hs"))
-    val train = sh.filter(col("doc_id") % evalMod =!= 0).persistTracked()
+    val train = sh.filter(col("doc_id") % evalMod =!= 0).persist()
     val evalShingles = sh.filter(col("doc_id") % evalMod === 0)
       .select(explode(col("hs")).as("shingle_hash")).distinct()
     val overlaps = train
@@ -779,7 +776,7 @@ object TextAnalysis {
                          maxBucketSize: Option[Int] = None): DataFrame = {
     import graft.ext.Dedup
     // persisted: the band projection and BOTH verify sides read it
-    val sigs = Dedup.minhashSignatures(docs, shingleSize).persistTracked()
+    val sigs = Dedup.minhashSignatures(docs, shingleSize).persist()
     val bands = Dedup.capBuckets(Dedup.minhashBands(sigs), maxBucketSize)
     // (train sigs, train bands, eval sigs, eval bands, eval side bounded?)
     val (trainSigs, trainBands, evalSigsSrc, evalBandsSrc, bounded) =
@@ -881,7 +878,7 @@ object TextAnalysis {
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(col("toks")).cast("long")).as("n_tokens"))
-      .persistTracked()
+      .persist()
     val total = perLang.agg(sum(col("n_tokens")).as("tot_tokens"))
     perLang.crossJoin(broadcast(total))
       .withColumn("actual_share",
@@ -948,7 +945,7 @@ object TextAnalysis {
     // tf-weighted sum is bit-identical to the per-occurrence fold.
     val ex = withTokens(docs).select(col("doc_id"), explode(col("toks")).as("token"))
     val tf = ex.groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf")).persistTracked()
+      .agg(count(lit(1)).as("tf")).persist()
     val vocab = tf.groupBy(col("token")).agg(sum(col("tf")).as("ctf"))
     val tot = vocab.agg(sum(col("ctf")).as("tot"))
     tf.join(vocab, "token")
@@ -999,7 +996,7 @@ object TextAnalysis {
     // unigram model over the FULL token stream (1-token docs included —
     // they train the model even though they can't be scored)
     val uni = tok.select(explode(col("toks")).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("c")).persistTracked()
+      .groupBy(col("token")).agg(count(lit(1)).as("c")).persist()
     val tot = uni.agg(sum(col("c")).as("tot"))
     // adjacent-pair stream, aggregated to (doc, w1, w2) grain first so the
     // model branch and the scoring branch both reuse the compact frame
@@ -1009,7 +1006,7 @@ object TextAnalysis {
           "i -> named_struct('w1', toks[i-1], 'w2', toks[i]))")).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("tf")).persistTracked()
+      .agg(count(lit(1)).as("tf")).persist()
     val model = tf.groupBy(col("w1"), col("w2")).agg(sum(col("tf")).as("c12"))
     // ln arguments combine the exact counts in DOUBLE with a fixed
     // left-assoc shape — the oracle spells the identical expression, so
@@ -1067,7 +1064,7 @@ object TextAnalysis {
   def trigramLogProb(docs: DataFrame): DataFrame = {
     val tok = withTokens(docs).select(col("doc_id"), col("toks"))
     val uni = tok.select(explode(col("toks")).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("c")).persistTracked()
+      .groupBy(col("token")).agg(count(lit(1)).as("c")).persist()
     val tot = uni.agg(sum(col("c")).as("tot"))
     // bigram model over the adjacent-pair stream — persisted once, read
     // twice (history c12 and backoff c23 are the SAME counts keyed on
@@ -1078,7 +1075,7 @@ object TextAnalysis {
           "i -> named_struct('w1', toks[i-1], 'w2', toks[i]))")).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("cb")).persistTracked()
+      .agg(count(lit(1)).as("cb")).persist()
     // adjacent-triple stream, aggregated to (doc, w1, w2, w3) grain first
     // so the model branch and the scoring branch reuse the compact frame
     val tf = tok.filter(size(col("toks")) >= 3)
@@ -1088,7 +1085,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("t.w1").as("w1"), col("t.w2").as("w2"),
         col("t.w3").as("w3"))
       .groupBy(col("doc_id"), col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("tf")).persistTracked()
+      .agg(count(lit(1)).as("tf")).persist()
     val model = tf.groupBy(col("w1"), col("w2"), col("w3"))
       .agg(sum(col("tf")).as("c123"))
     // fixed left-assoc shapes — the oracle spells the identical
@@ -1136,7 +1133,7 @@ object TextAnalysis {
    * score means the gate cannot pass them (mirrored in the oracle).
    */
   def perplexityFilter(docs: DataFrame, slack: Double = 1.0): DataFrame = {
-    val scores = trigramLogProb(docs).persistTracked()
+    val scores = trigramLogProb(docs).persist()
     val cut = scores.agg(
       round(sum(col("avg_logprob").cast("decimal(16,6)")).cast("double") /
         count(lit(1)) - lit(slack), 6).as("cutoff"))
@@ -1163,7 +1160,7 @@ object TextAnalysis {
       .withColumn("n_unique", size(array_distinct(col("toks"))))
       .withColumn("content_hash", md5(col("text")))
       .select("doc_id", "source", "n_chars", "content_hash", "n_tokens", "n_unique")
-      .persistTracked()
+      .persist()
     val copies = hashed.groupBy(col("content_hash"))
       .agg(count(lit(1)).as("n_copies"))
     hashed.join(copies, "content_hash")
@@ -1215,7 +1212,6 @@ object TextAnalysis {
    * degenerate repetition. Computed per row with sort-free array ops.
    */
   def repetitionRatio(docs: DataFrame): DataFrame = {
-    graft.functions.SketchExprs.register(docs.sparkSession)
     // per-row compiled stats (graft.functions.RepetitionStats): zero
     // shuffle — the explode + two-level-aggregate formulation (which the
     // DuckDB oracle mirrors) moves every gram string through an exchange
@@ -1466,7 +1462,6 @@ object TextAnalysis {
    * for cheap near-dup pre-clustering).
    */
   def fingerprint(docs: DataFrame): DataFrame = {
-    graft.functions.SketchExprs.register(docs.sparkSession)
     withTokens(docs)
       .select(
         col("doc_id"),

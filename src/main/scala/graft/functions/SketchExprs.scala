@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -22,49 +21,6 @@ import org.apache.spark.sql.types._
  * that case.
  */
 object SketchExprs {
-
-  /** Register the SQL functions once per session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProductFloat(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash32",
-      exprs => SimHash32(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      exprs => MinHashSignature(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_rep_stats", {
-      case Seq(toks, org.apache.spark.sql.catalyst.expressions.Literal(n, IntegerType)) =>
-        RepetitionStats(toks, n.asInstanceOf[Int])
-      case other => throw new IllegalArgumentException(
-        "graft_rep_stats(tokens, <int literal>) — got " + other)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_token_hash",
-      exprs => HashedTokens(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_tokens",
-      exprs => WhitespaceTokens(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_scrub",
-      exprs => ScrubPii(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hash", {
-      case Seq(toks, org.apache.spark.sql.catalyst.expressions.Literal(n, IntegerType)) =>
-        HashedShingles(toks, n.asInstanceOf[Int])
-      case other => throw new IllegalArgumentException(
-        "graft_shingle_hash(tokens, <int literal>) — got " + other)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_bands", {
-      case Seq(emb,
-          org.apache.spark.sql.catalyst.expressions.Literal(dim, IntegerType),
-          org.apache.spark.sql.catalyst.expressions.Literal(nb, IntegerType),
-          org.apache.spark.sql.catalyst.expressions.Literal(ppb, IntegerType)) =>
-        LshBands(emb, dim.asInstanceOf[Int], nb.asInstanceOf[Int], ppb.asInstanceOf[Int])
-      case other => throw new IllegalArgumentException(
-        "graft_lsh_bands(embedding, <dim literal>, <bands literal>, <planes/band literal>) — got " + other)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_zorder",
-      exprs => ZOrder2(exprs.head, exprs(1)), "built-in")
-    // aggregate: the analyzer wraps a bare AggregateFunction in Complete mode
-    reg.createOrReplaceTempFunction("graft_cms",
-      CountMinSketchAgg.fromExprs, "built-in")
-  }
 
   // shared per-thread MD5 for the static hash helpers below (called from
   // generated code, so one instance per executor thread, never per row)

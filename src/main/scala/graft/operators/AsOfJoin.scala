@@ -29,18 +29,15 @@ object AsOfJoin {
    * The custom-operator implementation ((c) path): plans through
    * [[graft.plans.AsOfJoinNode]] → [[graft.plans.AsOfJoinExec]], a
    * sort-merge physical operator (one shuffle + sort per side, O(n+m)
-   * single-pass merge, one buffered right row). Registers the planner
-   * strategy on the session if absent. Key columns must share a data type;
+   * single-pass merge, one buffered right row). Plans only on a session
+   * built with [[graft.plans.GraftExtensions]], which injects
+   * [[graft.plans.AsOfJoinStrategy]]. Key columns must share a data type;
    * time columns must be long-backed and non-null on the right.
    */
   def planBased(left: DataFrame, right: DataFrame,
                 leftKey: String, rightKey: String,
                 leftTime: String, rightTime: String): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    }
     val lp = left.queryExecution.analyzed
     // null right times have no as-of meaning (mirrors apply() and the DuckDB
     // oracle's `<=`, which is NULL on null), and a null right KEY can never

@@ -60,8 +60,8 @@ object BloomJoin {
     * evaluations as the explicit-`expectedItems` path, and no cache
     * entry with caller-owned lifetime escapes (the r10 form leaked one
     * per invocation until the driver's clearCache). Callers with an
-    * EXPENSIVE derived build side should persist it themselves (ideally
-    * under [[graft.ext.CacheScope.withCached]]) before calling.
+    * EXPENSIVE derived build side should persist it themselves before
+    * calling.
     *
     * CONTRACT: `small` must be DETERMINISTIC (no `sample`/`rand`-derived
     * lineage) on the auto-sized path. The Bloom sketch is built from the

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate,
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
-import graft.functions.{CountMinSketchAgg, DotProductFloat, HashedShingles, HashedTokens, LshBands, MinHashSignature, RepetitionStats, SimHash32}
+import graft.functions.{CountMinSketchAgg, DotProductFloat, HashedShingles, HashedTokens, LshBands, MinHashSignature, RepetitionStats, ScrubPii, SimHash32, WhitespaceTokens, ZOrder2}
 
 /**
  * The 100 TB switch for exact distincts (SURVEY.md §7.4): an optimizer rule
@@ -141,9 +141,11 @@ case class StripRedundantGenerateFilter() extends Rule[LogicalPlan] with Predica
 /**
  * Session extensions: install via
  * `spark.sql.extensions=graft.plans.GraftExtensions` (or
- * `.withExtensions(new GraftExtensions)`) — registers the custom sketch
- * expressions as SQL functions permanently and injects the approx-distinct
- * rewrite rule.
+ * `.withExtensions(new GraftExtensions)`, as [[graft.Session.builder]]
+ * does) — the one place the `graft_*` SQL functions, the optimizer rules
+ * and the as-of planner strategy are installed. Sessions cloned from an
+ * extended one (`newSession()`, a stream's `foreachBatch` session) inherit
+ * them.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -193,7 +195,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           s"graft_lsh_bands(embedding, <dim>, <bands>, <planes/band> literals) — got $other")
       }))
     e.injectFunction((FunctionIdentifier("graft_zorder"),
-      info("graft_zorder", classOf[graft.functions.ZOrder2]),
-      (exprs: Seq[Expression]) => graft.functions.ZOrder2(exprs.head, exprs(1))))
+      info("graft_zorder", classOf[ZOrder2]),
+      (exprs: Seq[Expression]) => ZOrder2(exprs.head, exprs(1))))
+    e.injectFunction((FunctionIdentifier("graft_tokens"),
+      info("graft_tokens", classOf[WhitespaceTokens]),
+      (exprs: Seq[Expression]) => WhitespaceTokens(exprs.head)))
+    e.injectFunction((FunctionIdentifier("graft_scrub"),
+      info("graft_scrub", classOf[ScrubPii]),
+      (exprs: Seq[Expression]) => ScrubPii(exprs.head)))
   }
 }

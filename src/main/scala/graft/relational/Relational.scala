@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ext.CacheScope.TrackedPersist
 
 /**
  * Relational extension surface over the TPC-H-ish driver testdata
@@ -462,7 +461,7 @@ object Relational {
       .withColumn("recency_days", datediff(col("ref_date"), col("last_order")))
       .select(col("o_custkey"), col("recency_days"), col("frequency"),
         col("monetary_d").cast("double").as("monetary"))
-      .persistTracked()
+      .persist()
     val bounds = base.agg(
       expr("percentile(recency_days, 0.25)").as("r25"),
       expr("percentile(recency_days, 0.50)").as("r50"),
@@ -512,7 +511,7 @@ object Relational {
     val rev = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("revenue_d"))
-      .persistTracked() // customer grain, read twice (bounds + assignment)
+      .persist() // customer grain, read twice (bounds + assignment)
     val ps = (1 until buckets).map(i => i.toDouble / buckets)
     val bounds = rev.agg(
       expr(s"percentile(CAST(revenue_d AS DOUBLE), array(${ps.mkString(", ")}))")

@@ -35,55 +35,6 @@ final case class ClosedSession(
  *     `flatMapGroupsWithState` — for semantics `session_window` can't
  *     express (e.g. emitting provisional sessions, custom merge rules).
  */
-object StreamDedup {
-
-  /**
-   * Streaming exact deduplication by id — the dedup machinery the reference
-   * lacks entirely (SURVEY §2.7 "absent streaming machinery"). State is
-   * bounded by the watermark: a duplicate arriving within the watermark of
-   * the first occurrence is dropped; later state is evicted.
-   */
-  def byIdWithinWatermark(events: org.apache.spark.sql.DataFrame,
-                          idCol: String, timeCol: String,
-                          watermark: String = "10 minutes"): org.apache.spark.sql.DataFrame =
-    events
-      .withWatermark(timeCol, watermark)
-      .dropDuplicatesWithinWatermark(idCol)
-
-  /**
-   * Streaming NEAR-duplicate suppression: drop a document whose 32-bit
-   * SimHash sketch ([[graft.ext.Dedup.simhash]] — insensitive to small
-   * edits, so near-identical texts collide at hamming 0) equals an
-   * earlier document's sketch within the watermark. First arrival wins;
-   * state is one entry per distinct sketch inside the watermark window,
-   * evicted as the watermark advances — the streaming leg of the batch
-   * near-dup family (exact-sketch regime; banded candidate generation
-   * stays a batch job because a streaming pair join would need unbounded
-   * two-sided state).
-   */
-  def bySimhashWithinWatermark(docs: org.apache.spark.sql.DataFrame,
-                               textCol: String = "text",
-                               timeCol: String = "event_time",
-                               watermark: String = "10 minutes"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    graft.functions.SketchExprs.register(docs.sparkSession)
-    // this is a pass-through FILTER: docs it cannot sketch (NULL text)
-    // must still flow out, not silently vanish — they bypass the dedup
-    // with a NULL sketch (a NULL text is not a near-duplicate of anything
-    // sketchable). Tokenization is the shared canonical rule, so stream
-    // and batch sketches can never drift.
-    val sketchable = graft.ext.TextAnalysis
-      .withTokens(docs.filter(col(textCol).isNotNull), textCol)
-      .withColumn("simhash", expr("graft_simhash32(graft_token_hash(toks))"))
-      .drop("toks")
-      .withWatermark(timeCol, watermark)
-      .dropDuplicatesWithinWatermark("simhash")
-    val passthrough = docs.filter(col(textCol).isNull)
-      .withColumn("simhash", lit(null).cast("long"))
-    sketchable.unionByName(passthrough)
-  }
-}
-
 object GlobalSessions {
 
   /** Gap-based sessions via the built-in session_window (streaming or batch).

@@ -123,18 +123,6 @@ object StreamJob {
       .start()
 
   /**
-   * Stream-static enrichment join (one of SURVEY §2.7's "absent streaming
-   * machinery" upgrades): every micro-batch joins the static dimension —
-   * stateless, and with `broadcast` on the dim side the stream is never
-   * shuffled. At cluster scale this is the stream-side dimension lookup
-   * (user profile, item catalog); a dim too big to broadcast degrades to a
-   * per-batch shuffled join, still stateless.
-   */
-  def enrichWithStatic(stream: DataFrame, dim: DataFrame,
-                       key: String, joinType: String = "left"): DataFrame =
-    stream.join(broadcast(dim), Seq(key), joinType)
-
-  /**
    * Stream-stream interval join: view→purchase attribution. Each view of
    * a visitor joins every purchase the SAME visitor makes inside
    * `[view_time, view_time + horizon]`.
@@ -183,69 +171,5 @@ object StreamJob {
         joinType)
       .select(col("visitorid"), col("view_item"), col("view_time"),
         col("purchase_item"), col("purchase_time"))
-  }
-
-  /**
-   * Streaming count-min sketch over a key column
-   * ([[graft.functions.CountMinSketchAgg]]): per-trigger the sketch row
-   * holds estimated counts over the WHOLE stream so far (complete/update
-   * output) — bounded state (depth×width longs) no matter how many
-   * distinct keys the stream carries, the streaming half of the
-   * heavy-hitter story next to the batch `ext.SpaceSavingTopK`.
-   */
-  def streamingCms(events: DataFrame, keyCol: String): DataFrame = {
-    graft.functions.SketchExprs.register(events.sparkSession)
-    events
-      .select(graft.ext.TextAnalysis.hash32(col(keyCol)).as("h"))
-      .agg(expr("graft_cms(h)").as("cms"))
-  }
-
-  /**
-   * Streaming heavy hitters: the space-saving typed Aggregator
-   * ([[graft.ext.SpaceSavingTopK]]) as a complete-mode global aggregate —
-   * per trigger, one row with the top-k (key, count) over the whole stream
-   * so far. State is the bounded `capacity`-entry counter structure no
-   * matter how many distinct keys flow past (contrast with a streaming
-   * `groupBy(key).count`, whose state grows with the key domain) — the
-   * exact-on-hot-keys complement to [[streamingCms]]'s estimate-everything
-   * sketch.
-   */
-  def streamingTopK(events: DataFrame, keyCol: String,
-                    k: Int = 5, capacity: Int = 64): DataFrame = {
-    import events.sparkSession.implicits._
-    // null keys are dropped BEFORE the typed boundary: TopKState's ordered
-    // (count, key) mirror cannot order null keys (tuple compare would NPE
-    // on a count tie inside an executor). .name keeps the TypedColumn (an
-    // .as alias would untype it, and typed Dataset.select rejects that).
-    events.select(col(keyCol).cast("string").as("k"))
-      .filter(col("k").isNotNull).as[String]
-      .select(new graft.ext.SpaceSavingTopK(k, capacity).toColumn.name("topk"))
-      .toDF()
-  }
-
-  /**
-   * Streaming uniform sample: the bounded bottom-k aggregator
-   * ([[graft.ext.BottomKSample]]) as a complete-mode global aggregate —
-   * per trigger, one row with the k stream elements whose md5(key) is
-   * smallest over everything seen so far. Because bottom-k state is
-   * mergeable and ORDER-INSENSITIVE, the sample after any number of
-   * micro-batches equals the batch sample of the union — a uniform,
-   * reproducible k-subset of an unbounded stream in O(k) state (the
-   * reservoir-sampling role, without RNG state in checkpoints).
-   */
-  def streamingSample(events: DataFrame, keyCol: String, k: Int = 5): DataFrame = {
-    import events.sparkSession.implicits._
-    // the aggregator's input is (sortKey: String, payload: Long); the key
-    // itself rides appended to its own md5 (32 hex chars, so the key
-    // starts at position 34 — no delimiter ambiguity) and is peeled back
-    // out of the finished sample
-    events.select(col(keyCol).cast("string").as("k"))
-      .filter(col("k").isNotNull)
-      .select(concat(md5(col("k")), lit("|"), col("k")).as("skey"))
-      .as[String]
-      .map(s => (s, 0L))
-      .select(new graft.ext.BottomKSample(k).toColumn.name("sample"))
-      .map(_.map(_._1.substring(33)))
-      .toDF("sampled_keys")
   }
 }

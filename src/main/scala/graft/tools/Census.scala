@@ -307,7 +307,6 @@ object Census {
       .map(_.stripPrefix("tol=").toDouble).getOrElse(2.0)
     val spark = graft.Session.builder(graft.Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.SketchExprs.register(spark)
     sys.props("graft.frame.cache.disable") = "1"
     // the sweep's by-design exclusion: the all-pairs recall ground truth
     val exclude = Set("q_embed_neardup")

@@ -22,7 +22,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
  * 100 TB corpus plans to, where joins small-sf size estimates would
  * broadcast shuffle instead. Both run with FrameCache off (a warm memo
  * replaces a whole family's lineage with a parquet scan of the memo) and
- * clear the CacheManager before every build: operators persistTracked()
+ * clear the CacheManager before every build: operators persist()
  * engine-internal frames eagerly at construction, so a frame registered
  * while planning an alphabetically earlier query would otherwise be
  * substituted into later plans, making the counts iteration-order

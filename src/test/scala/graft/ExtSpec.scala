@@ -990,7 +990,6 @@ class ExtSpec extends SparkSpec {
     //    Codebook rejects degenerate norms at construction (pinned below).
     import org.apache.spark.sql.functions.{broadcast, col, expr, row_number}
     import org.apache.spark.sql.expressions.Window
-    graft.functions.SketchExprs.register(spark)
     val vecs = Seq(
       (0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)),
       (2L, Seq(0.6f, 0.8f, 0f, 0f)), (3L, Seq(0f, 0f, 0f, 0f)), // zero-norm

@@ -43,54 +43,4 @@ class LayoutSpec extends SparkSpec {
     val q11min = ZOrder2.interleave(512, 512)       // both dims >= 512
     assert(q00max < q11min)
   }
-
-  test("partitioned write prunes non-matching directories at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
-    val df = (0 until 1000).map(i => (i.toLong, s"lang${i % 4}", i * 1.5))
-      .toDF("id", "lang", "score")
-    Layout.writePartitioned(df, dir, "lang")
-    val read = spark.read.parquet(dir).filter(col("lang") === "lang2")
-    // collect() executes THIS Dataset's QueryExecution, so the scan node
-    // inspected below carries populated metrics (count() would build and
-    // run a separate plan, leaving these metrics at zero)
-    assert(read.collect().length === 250)
-    // the scan must carry the partition filter (directory pruning) and
-    // actually read only the matching partition's files — the numFiles
-    // metric counts post-pruning (Dataset.inputFiles would not: it lists
-    // the whole relation)
-    val scan = read.queryExecution.executedPlan.collectLeaves().head
-      .asInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]
-    assert(scan.toString.contains("PartitionFilters") &&
-      scan.toString.contains("lang2"), scan.toString)
-    val totalFiles = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    val readFiles = scan.metrics("numFiles").value
-    assert(readFiles > 0 && readFiles < totalFiles,
-      s"pruning read $readFiles of $totalFiles files")
-    val lang2Files = new java.io.File(s"$dir/lang=lang2").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(readFiles === lang2Files)
-  }
-
-  test("clusterByZ range-partitions disjointly and sorts within partitions") {
-    val rnd = new scala.util.Random(3)
-    val df = Seq.fill(2000)((rnd.nextInt(1 << 15).toLong, rnd.nextInt(1 << 15).toLong))
-      .toDF("x", "y")
-    val clustered = Layout.clusterByZ(df, col("x"), col("y"), numPartitions = 8)
-    // recompute z on the clustered output (helper column is dropped)
-    val withPid = clustered
-      .withColumn("z", Layout.zValue(col("x"), col("y")))
-      .withColumn("pid", spark_partition_id())
-    val ranges = withPid.groupBy("pid").agg(min("z").as("lo"), max("z").as("hi"))
-      .orderBy("lo").collect().map(r => (r.getLong(1), r.getLong(2)))
-    assert(ranges.length > 1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 <= lo2, "partition z-ranges overlap")
-      case _ =>
-    }
-    // rows inside each partition arrive z-sorted
-    val perPart = withPid.select("pid", "z").rdd
-      .mapPartitions(it => Iterator(it.map(_.getLong(1)).toSeq)).collect()
-    perPart.foreach(zs => assert(zs == zs.sorted, "partition not z-sorted"))
-  }
 }

@@ -218,8 +218,8 @@ class PathMiningSpec extends SparkSpec {
     // the lazy-generation shape (count pass materializes each generation;
     // the final round's merge stream is never computed) must still free
     // every registered generation on exit — track RDD ids registered
-    // DURING the call, set-difference against survivors (the same
-    // race-proofing CacheScopeSpec uses against the shared session)
+    // DURING the call, set-difference against survivors (race-proofing
+    // against other suites sharing the session)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val docs = Seq(
       (1L, "en", "a a b a a b"),

@@ -31,6 +31,13 @@ class SessionSpec extends SparkSpec {
     val rules = state.optimizer.extendedOperatorOptimizationRules
     Seq(ApproxDistinctRewrite(), ApproxPercentileRewrite(), StripRedundantGenerateFilter())
       .foreach(r => assert(rules.contains(r), s"${r.ruleName} not injected"))
-    assert(spark.catalog.functionExists("graft_dot"))
+    assert(state.planner.extraPlanningStrategies.contains(AsOfJoinStrategy))
+    // the extension is the one install path: a session cloned from the
+    // factory one resolves every graft_* function with nothing registered
+    val fresh = spark.newSession()
+    Seq("graft_dot", "graft_simhash32", "graft_minhash", "graft_token_hash",
+      "graft_rep_stats", "graft_shingle_hash", "graft_cms", "graft_lsh_bands",
+      "graft_zorder", "graft_tokens", "graft_scrub")
+      .foreach(f => assert(fresh.catalog.functionExists(f), s"$f not installed"))
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
 import graft.schema.Schemas
-import graft.stream.{GlobalSessions, SessionEvent, StreamDedup, StreamJob}
+import graft.stream.{GlobalSessions, SessionEvent, StreamJob}
 
 // Top-level (NOT nested in the suite): Janino can't call accessors on a
 // case class declared inside a test class, so MemoryStream encoders fall
@@ -16,8 +16,6 @@ import graft.stream.{GlobalSessions, SessionEvent, StreamDedup, StreamJob}
 case class StreamingEv(visitorid: String, event_time: java.sql.Timestamp,
                        event: String, itemid: String)
 
-case class StreamingDoc(text: String, event_time: java.sql.Timestamp)
-
 /** Pins the per-batch parity semantics (SURVEY.md §2.7) and the
   * correct-mode cross-batch sessionization upgrades. */
 class StreamingSpec extends SparkSpec {
@@ -25,8 +23,6 @@ class StreamingSpec extends SparkSpec {
 
   private type Ev = StreamingEv
   private val Ev = StreamingEv
-  private type Doc = StreamingDoc
-  private val Doc = StreamingDoc
 
   test("foreachBatch parity: sessions split at batch boundaries, ids collide") {
     implicit val sqlCtx = spark.sqlContext
@@ -94,127 +90,6 @@ class StreamingSpec extends SparkSpec {
     assert(out.length === 2)
     assert(out.head.getAs[Long]("events_in_session") === 3L)
     assert(out(1).getAs[Long]("events_in_session") === 1L)
-  }
-
-  test("stream-static join enriches each micro-batch from the static dim without state") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val dim = Seq(("i1", 9.99), ("i2", 5.00)).toDF("itemid", "price")
-    val q = StreamJob.enrichWithStatic(ms.toDF(), dim, "itemid")
-      .writeStream.outputMode("append").format("memory").queryName("enriched").start()
-    try {
-      ms.addData(Ev("u1", ts(10), "view", "i1"), Ev("u2", ts(20), "view", "i3"))
-      q.processAllAvailable()
-      ms.addData(Ev("u3", ts(30), "view", "i2"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("enriched").collect()
-      .map(r => r.getAs[String]("itemid") ->
-        (if (r.isNullAt(r.fieldIndex("price"))) null else r.getAs[Double]("price"))).toMap
-    assert(got === Map("i1" -> 9.99, "i2" -> 5.0, "i3" -> null)) // left join keeps unmatched
-  }
-
-  test("streaming top-k: bounded space-saving state spans micro-batches (complete mode)") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val q = StreamJob.streamingTopK(ms.toDF(), "itemid", k = 2, capacity = 8)
-      .writeStream.outputMode("complete").format("memory").queryName("topk_stream").start()
-    try {
-      ms.addData(Ev("u1", ts(10), "view", "hot"), Ev("u1", ts(20), "view", "hot"))
-      q.processAllAvailable()
-      // null key must be dropped before the typed aggregate (the ordered
-      // state mirror cannot compare null keys on a count tie)
-      ms.addData(Ev("u2", ts(30), "view", "hot"), Ev("u2", ts(40), "view", "cold"),
-        Ev("u3", ts(50), "view", null))
-      q.processAllAvailable()
-    } finally q.stop()
-    val top = spark.table("topk_stream").collect().head.getSeq[Row](0)
-      .map(r => (r.getString(0), r.getLong(1)))
-    // counts span both batches: the aggregator state merged, not reset
-    assert(top === Seq(("hot", 3L), ("cold", 1L)))
-  }
-
-  test("streaming near-dup: equal-sketch docs are suppressed across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Doc]
-    val q = StreamDedup.bySimhashWithinWatermark(ms.toDF(), watermark = "1 hour")
-      .writeStream.outputMode("append").format("memory").queryName("neardup_stream").start()
-    val same = "the quick brown fox jumps over the lazy dog today"
-    val other = "completely different words about shuffles and partitions here"
-    try {
-      ms.addData(Doc(same, ts(10)), Doc(other, ts(20)))
-      q.processAllAvailable()
-      // identical text in a LATER batch -> same sketch -> suppressed;
-      // NULL text is unsketchable and must PASS THROUGH, never vanish
-      ms.addData(Doc(same, ts(30)), Doc(other + " extended", ts(40)),
-        Doc(null, ts(45)), Doc(null, ts(46)))
-      q.processAllAvailable()
-      // flush: watermark-held rows emit once a far-future event advances it
-      ms.addData(Doc("flush marker far in the future", ts(100000)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("neardup_stream").collect()
-    val texts = rows.map(_.getAs[String]("text"))
-    assert(texts.count(_ == same) === 1)
-    assert(texts.count(t => t != null && t.startsWith("completely different")) === 2)
-    // both NULL-text docs flow out with a NULL sketch (not dedup'd away)
-    assert(rows.count(r => r.getAs[String]("text") == null
-      && r.isNullAt(r.fieldIndex("simhash"))) === 2)
-    // the sketch column rides along for downstream audit
-    assert(spark.table("neardup_stream").columns.contains("simhash"))
-  }
-
-  test("streaming sample: bottom-k state is order-insensitive across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val q = StreamJob.streamingSample(ms.toDF(), "itemid", k = 3)
-      .writeStream.outputMode("complete").format("memory").queryName("sample_stream").start()
-    val items = (1 to 10).map(i => s"item$i")
-    try {
-      // two cuts, reverse order — the final sample must not care; item1
-      // repeats many times and must still fill at most ONE slot
-      ms.addData(items.drop(6).map(it => Ev("u", ts(1), "view", it)): _*)
-      ms.addData((1 to 20).map(i => Ev("u", ts(1), "view", "item1")): _*)
-      q.processAllAvailable()
-      ms.addData(items.take(6).map(it => Ev("u", ts(2), "view", it)): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("sample_stream").collect().head.getSeq[String](0)
-    // batch reference: 3 smallest md5(key), md5-order
-    val ref = items.map { it =>
-      val d = java.security.MessageDigest.getInstance("MD5").digest(it.getBytes("UTF-8"))
-      (d.map("%02x".format(_)).mkString, it)
-    }.sortBy(_._1).take(3).map(_._2)
-    assert(got.toSeq === ref)
-  }
-
-  test("streaming CMS: sketch state merges across micro-batches (complete mode)") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val q = StreamJob.streamingCms(ms.toDF(), "itemid")
-      .writeStream.outputMode("complete").format("memory").queryName("cms_stream").start()
-    try {
-      ms.addData(Ev("u1", ts(10), "view", "hot"), Ev("u1", ts(20), "view", "hot"))
-      q.processAllAvailable()
-      ms.addData(Ev("u2", ts(30), "view", "hot"), Ev("u2", ts(40), "view", "cold"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val sketch = spark.table("cms_stream").collect().head.getSeq[Long](0)
-    assert(sketch.length === 4 * 256)
-    assert(sketch.sum === 4L * 4L) // 4 events x depth increments, across both batches
-    // estimate("hot") = 3 (both batches merged into one sketch row)
-    def est(key: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8"))
-      val h = ((md(0) & 0xffL) << 24) | ((md(1) & 0xffL) << 16) |
-              ((md(2) & 0xffL) << 8) | (md(3) & 0xffL)
-      (0 until 4).map { j =>
-        val b = (((2L * j + 1) * h + (104729L * j + 12345L)) % 4294967311L % 256L).toInt
-        sketch(j * 256 + b)
-      }.min
-    }
-    assert(est("hot") === 3L)
-    assert(est("cold") === 1L)
   }
 
   test("stream-stream interval join: purchase attributes to views within the horizon") {
@@ -396,39 +271,6 @@ class StreamingSpec extends SparkSpec {
     assert(seen.toSeq === Seq((0L, "i1"), (1L, "i2")))
   }
 
-  test("RocksDB state store: stateful streaming runs on the disk-backed provider") {
-    // the 100 TB-state path: HDFSBackedStateStore keeps every key in
-    // executor heap; RocksDB spills to local disk, so streaming state is
-    // bounded by disk not memory. Same query semantics, swapped provider.
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[Ev]
-      val q = StreamDedup.byIdWithinWatermark(ms.toDF(), "itemid", "event_time", "10 minutes")
-        .writeStream.outputMode("append").format("memory").queryName("rocks_dedup").start()
-      try {
-        ms.addData(Ev("u1", ts(100000), "view", "a"), Ev("u2", ts(100010), "view", "a"))
-        q.processAllAvailable()
-        ms.addData(Ev("u3", ts(100020), "view", "a"), Ev("u4", ts(100030), "view", "b"))
-        q.processAllAvailable()
-        // duplicate drop works across batches on the RocksDB provider
-        val got = spark.table("rocks_dedup").collect().map(_.getAs[String]("itemid")).sorted
-        assert(got.toSeq === Seq("a", "b"))
-        // and the state operator really ran RocksDB (provider-specific metrics)
-        val so = q.lastProgress.stateOperators
-        assert(so.nonEmpty && so.head.customMetrics.keySet.toString.contains("rocksdb"),
-          s"expected rocksdb custom metrics, got ${so.headOption.map(_.customMetrics)}")
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("exact-gap boundary: session_window MERGES two events exactly 1800.000000s apart") {
     // pins the inclusivity rule the q_global_sessions oracle depends on:
     // session_window extends a session through an event at exactly
@@ -441,24 +283,6 @@ class StreamingSpec extends SparkSpec {
     val out = GlobalSessions.sessionWindow(df, streaming = false).collect()
     assert(out.length === 1)
     assert(out.head.getAs[Long]("events_in_session") === 2L)
-  }
-
-  test("streaming dedup drops duplicate ids across micro-batches within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val deduped = StreamDedup.byIdWithinWatermark(
-      ms.toDF(), idCol = "itemid", timeCol = "event_time", watermark = "10 minutes")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("deduped").start()
-    try {
-      ms.addData(Ev("u1", ts(10), "view", "id1"), Ev("u1", ts(20), "view", "id2"))
-      q.processAllAvailable()
-      // id1 again in a LATER batch, still within the watermark -> dropped
-      ms.addData(Ev("u1", ts(30), "view", "id1"), Ev("u1", ts(40), "view", "id3"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val ids = spark.table("deduped").collect().map(_.getAs[String]("itemid")).sorted
-    assert(ids === Array("id1", "id2", "id3"))
   }
 
   test("fractional gap in (1800,1801): session_window splits, floor-seconds parity mode merges") {
@@ -562,37 +386,6 @@ class StreamingSpec extends SparkSpec {
     assert(u1.head.getAs[Long]("session_length") === 0L)
   }
 
-  test("streaming minute anomaly: causal z against prior finalized minutes only") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[(String, java.sql.Timestamp)]
-    val q = graft.stream.StreamAnomaly
-      .minuteAnomalyStreaming(spark,
-        ms.toDF().toDF("event", "event_time"))
-      .writeStream.format("memory").queryName("anomaly_out")
-      .outputMode("append").start()
-    try {
-      // minute counts 2, 4, 6 starting at t=600 s
-      val evs =
-        Seq(600L, 601L).map(("view", _)) ++
-          Seq(660L, 661L, 662L, 663L).map(("view", _)) ++
-          Seq(720L, 721L, 722L, 723L, 724L, 725L).map(("view", _))
-      ms.addData(evs.map { case (e, t) => (e, ts(t)) }: _*)
-      q.processAllAvailable()
-      // push the watermark (10 min lag) past every open minute
-      ms.addData(("view", ts(600L + 3600L)))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val out = spark.table("anomaly_out").orderBy("minute").collect()
-    assert(out.length === 3) // the flush event's own minute is still open
-    assert(out.map(_.getAs[Long]("cnt")).toSeq === Seq(2L, 4L, 6L))
-    assert(out.map(_.getAs[Long]("n_prior")).toSeq === Seq(0L, 1L, 2L))
-    // first two minutes: insufficient history → no score (emitted as null)
-    assert(out.take(2).forall(_.isNullAt(out.head.fieldIndex("z"))))
-    // third: mean 3, var (4+16)/2 − 9 = 1 → z = (6−3)/1 = 3
-    assert(out(2).getAs[Double]("z") === 3.0)
-  }
-
   test("stateful sessionization state survives a query restart") {
     // operational recovery of the CORRECT-mode path: the open-session
     // state must be restored from the checkpoint's state store, so an
@@ -663,6 +456,10 @@ class StreamingSpec extends SparkSpec {
         q.processAllAvailable()
         ms.addData(SessionEvent("u2", ts(100001)))
         q.processAllAvailable()
+        // the state operator really ran RocksDB (provider-specific metrics)
+        val so = q.lastProgress.stateOperators
+        assert(so.nonEmpty && so.head.customMetrics.keySet.toString.contains("rocksdb"),
+          s"expected rocksdb custom metrics, got ${so.headOption.map(_.customMetrics)}")
       } finally q.stop()
 
       val u1 = spark.table("rocksdb_sessions")
@@ -671,36 +468,6 @@ class StreamingSpec extends SparkSpec {
       assert(u1.head.getAs[Long]("events_in_session") === 3L)
       assert(u1.head.getAs[Long]("session_length") === 200L)
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("streaming minute anomaly drops events behind the watermark — no duplicate minutes") {
-    // same late-row class as the fMGWS session fix: a late event must not
-    // re-open a minute the watermark already finalized (it would re-emit
-    // the minute as a duplicate row with corrupted causal moments)
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[(String, java.sql.Timestamp)]
-    val q = graft.stream.StreamAnomaly
-      .minuteAnomalyStreaming(spark,
-        ms.toDF().toDF("event", "event_time"))
-      .writeStream.format("memory").queryName("late_anomaly_out")
-      .outputMode("append").start()
-    try {
-      ms.addData(("view", ts(600)), ("view", ts(601)))
-      q.processAllAvailable()
-      // watermark (10 min lag) passes minute 600 → finalized with cnt=2
-      ms.addData(("view", ts(600 + 3600)))
-      q.processAllAvailable()
-      // LATE event for the already-finalized minute — must be dropped
-      ms.addData(("view", ts(602)))
-      q.processAllAvailable()
-      ms.addData(("view", ts(600 + 7200)))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val m600 = spark.table("late_anomaly_out")
-      .filter(col("minute") === ts(600)).collect()
-    assert(m600.length === 1)
-    assert(m600.head.getAs[Long]("cnt") === 2L)
   }
 
   test("streaming sessionization across forced micro-batch cuts equals the batch result") {
@@ -772,57 +539,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.size === batch.size,
       s"session count diverged: stream=${streamed.size} batch=${batch.size}")
     streamed.zip(batch).foreach { case (s, b) => assert(s === b) }
-  }
-
-  test("streaming incremental dup-gram census equals the batch census after 3 forced cuts") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.stream.StreamCensus
-    val stateDir = java.nio.file.Files.createTempDirectory("census-state").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("census-ckpt").toString
-    // real corpus split into thirds, plus a handcrafted CROSS-CUT clone
-    // pair (same 7-token span, different cuts) so the census must merge
-    // per-batch increments to see it — a per-batch-only census would miss
-    val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text")).as[CDoc].collect().toSeq
-    val span = "alpha beta gamma delta epsilon zeta eta"
-    val third = corpus.size / 3
-    val cuts = Seq(
-      corpus.take(third) :+ CDoc(900001L, s"$span lone tail one"),
-      corpus.slice(third, 2 * third) :+ CDoc(900002L, s"head two $span"),
-      corpus.drop(2 * third))
-    assert(cuts.size === 3 && cuts.forall(_.nonEmpty))
-    val ms = MemoryStream[CDoc]
-    val q = StreamCensus.attach(ms.toDF(), stateDir, ckpt, n = 5)
-    try cuts.foreach { c => ms.addData(c); q.processAllAvailable() }
-    finally q.stop()
-    val streamCensus = StreamCensus.census(spark, stateDir)
-      .collect().map(_.getLong(0)).toSet
-    val all = spark.createDataset(cuts.flatten).toDF()
-    val batchCensus = graft.ext.Dedup.dupGramCensus(all, 5)
-      .collect().map(_.getLong(0)).toSet
-    assert(streamCensus.nonEmpty)
-    assert(streamCensus === batchCensus)
-    // the cross-cut clone span contributed: its grams exist in the census
-    val cloneGrams = graft.ext.Dedup.dupGramCensus(
-      spark.createDataset(Seq(CDoc(1L, s"$span x"), CDoc(2L, s"y $span"))).toDF(), 5)
-      .collect().map(_.getLong(0)).toSet
-    assert(cloneGrams.subsetOf(streamCensus))
-    // idempotence under re-execution (foreachBatch is at-least-once):
-    // generation b-1 is retained at commit, so a re-run of the LAST batch
-    // rebuilds the identical generation after its commit is lost
-    val lastGen = java.nio.file.Paths.get(s"$stateDir/state_b2")
-    assert(java.nio.file.Files.exists(lastGen))
-    val lastBatch = spark.createDataset(cuts(2)).toDF()
-    StreamCensus.updateBatch(stateDir, 5)(lastBatch, 2L) // commit exists: no-op
-    assert(StreamCensus.census(spark, stateDir)
-      .collect().map(_.getLong(0)).toSet === batchCensus)
-    scala.util.Using.resource(java.nio.file.Files.walk(lastGen)) { s =>
-      s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-    }
-    StreamCensus.updateBatch(stateDir, 5)(lastBatch, 2L) // rebuild from gen 1
-    assert(StreamCensus.census(spark, stateDir)
-      .collect().map(_.getLong(0)).toSet === batchCensus)
   }
 
   // Crash recovery certification (VERDICT r14 item 4), on BOTH state
@@ -957,47 +673,4 @@ class StreamingSpec extends SparkSpec {
       }
     }
   }
-
-  test("census: concurrent duplicate commits of one generation race safely") {
-    // the StreamCensus twin of the FrameCache forced-race test (which
-    // showed Linux rename(2) onto a non-empty directory surfaces as a
-    // bare FileSystemException): two threads run updateBatch for the
-    // SAME batch id at once — the at-least-once duplicate-execution
-    // shape. Both compute the deterministic generation, one commit wins,
-    // the loser discards its staging dir, and the census is intact.
-    import graft.stream.StreamCensus
-    val stateDir = java.nio.file.Files.createTempDirectory("census-race").toString
-    val docs = Seq(
-      CDoc(1L, "alpha beta gamma delta epsilon zeta eta one"),
-      CDoc(2L, "two alpha beta gamma delta epsilon zeta eta")).toDS().toDF()
-    // gate both driver threads at updateBatch ENTRY: each then passes the
-    // missing-generation check (the compute + staged parquet write behind
-    // it takes seconds, so both are inside the window) and both reach the
-    // commit rename — a latch inside the frame lineage would not work
-    // here, since one thread's multi-stage job would satisfy it alone
-    val gate = new java.util.concurrent.CountDownLatch(2)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContextExecutor =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      val runs = Seq.fill(2)(scala.concurrent.Future {
-        gate.countDown()
-        assert(gate.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        StreamCensus.updateBatch(stateDir, 5)(docs, 0L)
-      })
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(runs),
-        scala.concurrent.duration.Duration(180, "s"))
-    } finally pool.shutdown()
-    val entries = new java.io.File(stateDir).listFiles()
-    assert(entries.map(_.getName).toSeq === Seq("state_b0"),
-      s"exactly one committed generation, got ${entries.map(_.getName).toSeq}")
-    val expected = graft.ext.Dedup.dupGramCensus(docs, 5)
-      .collect().map(_.getLong(0)).toSet
-    assert(StreamCensus.census(spark, stateDir)
-      .collect().map(_.getLong(0)).toSet === expected && expected.nonEmpty)
-  }
 }
-
-/** Top-level (encoder-friendly) document row for the census test. */
-case class CDoc(doc_id: Long, text: String)

@@ -162,7 +162,6 @@ class TokenizeSpec extends SparkSpec {
   }
 
   test("graft_tokens SQL registration returns the same arrays") {
-    graft.functions.SketchExprs.register(spark)
     val df = Seq((1, "  Hello\tWorld "), (2, ""), (3, "\tx")).toDF("id", "text")
     df.createOrReplaceTempView("tok_spec_in")
     val viaSql = spark.sql("SELECT id, graft_tokens(text) AS toks FROM tok_spec_in")
