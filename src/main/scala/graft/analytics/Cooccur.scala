@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-
 /**
  * Item co-occurrence with lift — the item-to-item collaborative-filtering
  * primitive over the event stream (the reference's item analyses,

@@ -3,7 +3,6 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-
 /**
  * Conversion-funnel analysis (A4/A12, stream_processor.py:186-229).
  *

@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-
 import TextAnalysis.withShingles
 
 /**

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-
 /**
  * Similarity search over an embedding column (`array<float>`): brute-force
  * cosine top-k as the exact baseline, and a sign-LSH (random-hyperplane)

@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-
 /**
  * Sparse count-vector cosine similarity with inverted-index blocking —
  * the term-space complement to the embedding-space ANN family

@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-
 /**
  * Text-analysis operators for an LLM training-data pipeline over the
  * `documents` table: tokenization, token counting, quality scoring,
